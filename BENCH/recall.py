@@ -8,6 +8,8 @@ approximate operators) and reports recall/precision at the default knobs
 plus a sweep of each operator's recall/cost dial. Results → QUALITY.md.
 
 Run: python BENCH/recall.py [sf_dir]   (default /root/testdata/sf0.1)
+SPARK_MASTER (default local[32]) and SPARK_DRIVER_MEMORY (default 32g)
+size the local session.
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ from __future__ import annotations
 import os
 import sys
 import time
+
+import numpy as np
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,6 +38,17 @@ def rp(found: set, truth: set) -> tuple[float, float]:
     return recall, precision
 
 
+def cos_pairs(df, threshold: float) -> set:
+    """Exact all-pairs cosine truth in numpy: {(id_a, id_b)} with
+    id_a < id_b and cos >= threshold."""
+    rows = df.select("vec_id", "embedding").collect()
+    ids = np.asarray([r[0] for r in rows])
+    X = np.asarray([r[1] for r in rows], dtype=np.float64)
+    n = np.linalg.norm(X, axis=1)
+    a, b = np.nonzero(np.triu((X @ X.T) / np.outer(n, n) >= threshold, k=1))
+    return {(int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))) for i, j in zip(a, b)}
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -41,12 +56,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(os.environ.get("SPARK_MASTER", "local[32]"))
         .appName("recall_measure")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -199,8 +214,6 @@ def main() -> None:
     # truth set is made non-empty by planting PERTURBED near-duplicates
     # (not exact copies): +2% on the first component ⇒ cos just under 1
     C_T = 0.98
-    from neontology_spark.similarity import cosine
-
     planted = vecs.orderBy("vec_id").limit(100).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.transform(
@@ -210,20 +223,40 @@ def main() -> None:
         "label",
     )
     corpus_c = vecs.unionByName(planted).cache()
-    va, vb = corpus_c.alias("a"), corpus_c.alias("b")
-    truth_c = pairs(
-        va.join(vb, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn(
-            "cos", cosine(F.col("a.embedding"), F.col("b.embedding"))
-        )
-        .filter(F.col("cos") >= C_T)
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    )
+    truth_c = cos_pairs(corpus_c, C_T)
     found_c = pairs(embedding_near_duplicates(corpus_c, threshold=C_T))
     r, p = rp(found_c, truth_c)
     lines.append(
         f"| embedding_near_dup cos>={C_T} (default, 100 planted perturbed "
         f"dups) | vs brute-force all-pairs | {len(found_c)} pairs | {r:.3f} "
+        f"| {p:.3f} |"
+    )
+
+    # t = 0.999 selects the (64, 4) banding (r = 16 bits per band), whose
+    # recall right at the threshold is the price of its selectivity. The
+    # planted pairs are v + s·g (g a random direction, |g| = |v|) with s
+    # spread so that cos runs from ~0.9999 down to ~0.9985: some pairs
+    # qualify, some just miss, none are identical.
+    T_HI, n_near = 0.999, 200
+    rs = np.random.RandomState(11)
+    near = []
+    for i, r in enumerate(vecs.orderBy("vec_id").limit(n_near).collect()):
+        v = np.asarray(r["embedding"], dtype=np.float64)
+        g = rs.standard_normal(len(v))
+        g *= np.linalg.norm(v) / np.linalg.norm(g)
+        s = 0.014 + 0.041 * i / n_near
+        near.append((r["vec_id"] + 2_000_000, [float(x) for x in v + s * g], r["label"]))
+    planted_t = spark.createDataFrame(
+        near, "vec_id long, embedding array<double>, label int"
+    ).withColumn("embedding", F.col("embedding").cast("array<float>"))
+    corpus_t = vecs.unionByName(planted_t).cache()
+    truth_t = cos_pairs(corpus_t, T_HI)
+    found_t = pairs(embedding_near_duplicates(corpus_t, threshold=T_HI))
+    r, p = rp(found_t, truth_t)
+    lines.append(
+        f"| embedding_near_dup cos>={T_HI} (default: planes=64,bands=4,r=16; "
+        f"{n_near} planted perturbed pairs, {len(truth_t)} at or above t) "
+        f"| vs brute-force all-pairs | {len(found_t)} pairs | {r:.3f} "
         f"| {p:.3f} |"
     )
 
@@ -237,12 +270,12 @@ def main() -> None:
         "Precision is post-verification (every operator exact-verifies its\n"
         "candidates), so <1.0 precision only appears where the verification\n"
         "statistic is itself an estimate (minhash signature Jaccard).\n\n"
-        "Round-4 note: the ANN plane/centroid matrices moved from plan\n"
-        "literals to a broadcast one-row array column (similarity.py\n"
-        "`_with_matrix`). The signatures are BIT-IDENTICAL to the literal\n"
-        "form (same planes, same left-to-right arithmetic — parity pytest\n"
-        "`test_broadcast_signature_matches_literal_form`), so recall\n"
-        "numbers carry over unchanged across that refactor.\n\n"
+        "Vector math: every signature, norm, cell assignment and probe\n"
+        "ranking comes from the one numpy dot-product kernel in\n"
+        "similarity.py (`_dots`). It reproduces the Spark-expression forms\n"
+        "it replaced value for value (golden pytest\n"
+        "`tests/test_similarity_golden.py`), so recall numbers carry over\n"
+        "unchanged across that refactor.\n\n"
         "| operator / knobs | measured against | found | recall | precision |\n"
         "|---|---|---|---|---|\n"
     )
@@ -255,6 +288,11 @@ def main() -> None:
   (whose pigeonhole chunking is *provably* exact over the hamming bound,
   confirmed 92k/92k pairs), and embedding near-dup on perturbed planted
   duplicates. Precision is 1.0 everywhere the verifier is exact.
+* **The t = 0.999 row prices the r = 16 banding**: at t ≥ 0.999
+  `_lsh_params_for_threshold` switches to planes=64,bands=4 so random
+  pairs almost never collide, at a per-pair miss rate of 1.8e-3 for a
+  pair exactly at cos 0.999 (5e-4 at 0.9995). The planted pairs straddle
+  the threshold, so any miss shows up here.
 * **The hard regime is measured, not hidden**: the driver corpus is
   bimodal (pairs are ~0 or ~1 similar), so a planted-overlap corpus
   with true Jaccard straddling the threshold probes where the 64-hash

@@ -1,128 +1,140 @@
-"""Similarity search over embedding columns (array<float>): brute-force
-cosine top-k (the exact baseline) and an LSH-bucketed approximate variant
-(the scale path).
+"""Similarity search over embedding columns (array<float|double>): brute-force
+cosine top-k (the exact baseline), hyperplane-LSH and IVF approximate
+top-k (the scale paths) and embedding near-duplicate pairs.
 
-Scale design:
-* brute-force: query set × corpus — broadcast the (small) query side, dot
-  products via zip_with/aggregate (JVM-side), per-query top-k via
-  window row_number. Exact; cost O(|Q|·N) — the baseline you verify the
-  ANN against, and the right tool when |Q| is small.
-* LSH (random hyperplanes): h-bit signature per vector; planes are
-  deterministic pseudo-random values derived from sha256(plane, dim) —
-  no driver-side RNG state, fully reproducible across runs and engines.
-  The plane/centroid matrices ride a broadcast one-row relation as a
-  single array<array<double>> column (NOT per-cell plan literals —
-  VERDICT r3 #1: literals were 10^5-10^6 plan nodes at production dims).
-  Candidates = vectors sharing a
-  signature band bucket; exact cosine re-rank on candidates only.
-  At 10^12 vectors the band join shuffles (band, bucket) keys — tune
-  bands/bits so bucket sizes stay bounded; hot buckets (near-duplicate
-  clusters) are exactly what AQE skew-join splits.
+One vector-math implementation: every dot product — scoring, cell
+assignment, norms, LSH signatures, k-means training and the collected
+query side — is ``_dots``, a left-to-right float64 dim loop over
+matrices that ``_as_matrix`` builds from Arrow list columns. Corpus rows
+cross the Python boundary once per Arrow batch (``mapInArrow``), as
+"Accelerating Python UDFs in Vectorized Query Execution" (CIDR'22)
+recommends; query sides are collected and ranked on the driver with the
+same helpers. The inverted file and the probes run the same code, so an
+identical vector always lands in and probes the same cell — the
+exact-duplicate oracles rest on that.
+
+Plans stay O(1) in matrix size: plane and centroid matrices ride kernel
+closures, never plan literals (10^5-10^6 nodes at production dims). LSH
+planes derive from sha256(plane, dim), so no RNG state exists. At 10^12
+vectors the LSH band join shuffles (band, bucket) keys — tune bands/bits
+so buckets stay bounded; hot buckets are what AQE skew-join splits.
 """
 
 from __future__ import annotations
 
 from typing import NamedTuple, Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
+
+from .bucketing import spread_to_parallelism
+
+# ---------------------------------------------------------------------------
+# the vector-math kernel — called on executors (inside mapInArrow /
+# applyInPandas closures; the package ships with the job) and on the driver
+# ---------------------------------------------------------------------------
+
+
+def _as_matrix(col, dim: Optional[int] = None, who: str = "vector"):
+    """(X, null, holes) from an Arrow list<float|double> column.
+
+    ``X`` is the float64 [n, dim] matrix: float32 is widened before any
+    arithmetic (per-term float32 rounding would make results
+    engine-dependent), NULL rows are zero and NULL elements NaN. ``null``
+    marks NULL vectors and ``holes`` non-NULL vectors with a NULL
+    element. Every non-NULL vector must have length ``dim`` (default: the
+    first one's); otherwise this raises, naming ``who``."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    null = col.is_null().to_numpy(zero_copy_only=False)
+    valid = ~null
+    lens = col.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = int(lens[valid][0]) if valid.any() else 0
+    wrong = valid & (lens != dim)
+    if wrong.any():
+        raise ValueError(
+            f"{who}: vector length {int(lens[wrong][0])} != dim={dim}"
+        )
+    X = np.zeros((n, dim), dtype=np.float64)
+    holes = np.zeros(n, dtype=bool)
+    flat = col.flatten()
+    if len(flat):
+        X[valid] = flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+        if flat.null_count:
+            holes[valid] = (
+                flat.is_null().to_numpy(zero_copy_only=False)
+                .reshape(-1, dim).any(axis=1)
+            )
+    return X, null, holes
+
+
+def _dots(X, C):
+    """Σ_d X[..., d] · C[..., d], accumulated left to right in float64 —
+    the one dot product in this module. Leading axes broadcast:
+    ``_dots(X[:, None], C[None])`` is the [n, m] score matrix against m
+    centroids/planes/queries, ``_dots(X, X)`` the squared norms and
+    ``_dots(A, B)`` row-wise pair dots. The fixed operation order makes
+    every score, norm, cell and sign bit reproducible (and equal to the
+    Spark ``aggregate(zip_with(...))`` fold this module used before —
+    tests/test_similarity_golden.py)."""
+    import numpy as np
+
+    if X.shape[-1] != C.shape[-1]:
+        raise ValueError(f"dot of dim {X.shape[-1]} with dim {C.shape[-1]}")
+    acc = np.zeros(np.broadcast_shapes(X.shape[:-1], C.shape[:-1]))
+    with np.errstate(over="ignore", invalid="ignore"):
+        for d in range(X.shape[-1]):
+            acc += X[..., d] * C[..., d]
+    return acc
+
+
+def _ranked(score, *ties):
+    """Indices ordered by ``score`` desc (NaN first, as Spark orders NaN
+    above every number), then by each ``ties`` array asc, then by index."""
+    import numpy as np
+
+    nan = np.isnan(score)
+    keys = (np.arange(len(score)),) + tuple(reversed(ties))
+    return np.lexsort(keys + (np.where(nan, 0.0, -score), ~nan))
 
 
 # ---------------------------------------------------------------------------
-# matrix shipping — broadcast one-row DataFrame, NOT per-cell literals
+# Arrow passes over the corpus
 # ---------------------------------------------------------------------------
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism
-    when the incoming plan yields fewer partitions.
-
-    The embeddings tables the similarity operators scan are a few MB of
-    parquet — 1-2 input splits at the session's split size — while the
-    per-row work (signatures, centroid dots, candidate scoring) is the
-    expensive part, so without this the compute stages run on 1-2 of the
-    cluster's cores (measured r6: the ivf re-rank at sf1.0 ran 8-wide on
-    32 cores purely because the index directory produced 8 splits). At
-    production scale the scan yields >= defaultParallelism splits and
-    this is a no-op — the repartition only fires exactly when the data
-    is small enough for the shuffle to be negligible."""
-    from .bucketing import spread_to_parallelism
-
-    # min_bytes=0: vector folds are heavy per byte — spreading pays for
-    # itself even on sub-MB embedding tables
-    return spread_to_parallelism(df, min_bytes=0)
 
 
 def _score_pairs_arrow(
-    df: DataFrame,
-    keep: list[str],
-    a_vec: str,
-    b_vec: str,
-    a_norm: str,
-    b_norm: str,
-    out: str = "cos",
+    df: DataFrame, keep: list[str], a_vec: str, b_vec: str, a_norm: str, b_norm: str
 ) -> DataFrame:
-    """cos = dot(a, b) / (an * bn) over candidate-pair rows, computed in
-    ONE vectorized Arrow stage (guide §4.2): vectors cross the boundary
-    as flat Arrow buffers (zero row-wise conversion), and the dot is a
-    per-DIMENSION numpy accumulation loop —
-
-        acc = ((0 + a0*b0) + a1*b1) + ...   (float64, left to right)
-
-    — the exact IEEE operation sequence of the JVM fold
-    ``aggregate(zip_with(a, b, *), 0.0, +)``, so results are
-    bit-identical to the expression form (oracle-checked and pytest-
-    asserted). float32 inputs are cast to float64 before any arithmetic,
-    matching ``_f64``. The expression form costs ~160 us per pair
-    (interpreted higher-order lambdas, one ArrayData per zip_with);
-    this kernel does the same work at numpy speed and cut the sf1.0
-    ivf re-rank from ~6.8 s to <1 s (measured r6).
-
-    ``keep`` columns pass through untouched; the input must have
-    non-NULL fixed-dimension vectors (candidate generation drops NULLs
-    upstream — enforced with a fail-fast assert here)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
+    """cos = dot(a, b) / (an * bn) over candidate-pair rows in ONE Arrow
+    pass. ``keep`` columns pass through untouched; the vectors must be
+    non-NULL (candidate generation drops NULLs upstream — asserted)."""
     sel = df.select(*keep, a_vec, b_vec, a_norm, b_norm)
     out_schema = StructType(
-        [sel.schema[c] for c in keep] + [StructField(out, DoubleType(), True)]
+        [sel.schema[c] for c in keep] + [StructField("cos", DoubleType(), True)]
     )
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
-        def mat(tbl, name):
-            arr = tbl.column(name)
-            if arr.null_count:
-                raise ValueError(
-                    f"_score_pairs_arrow: NULL vector in {name!r}"
-                )
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            n = len(arr)
-            if n and len(flat) % n:
-                raise ValueError(
-                    f"_score_pairs_arrow: ragged vectors in {name!r}"
-                )
-            return flat.reshape(n, -1).astype(np.float64, copy=False)
-
         for tbl in batches:
-            n = tbl.num_rows
-            if n == 0:
+            if tbl.num_rows == 0:
                 continue
-            av = mat(tbl, a_vec)
-            bv = mat(tbl, b_vec)
+            av, a_null, _ = _as_matrix(tbl.column(a_vec), who="_score_pairs_arrow")
+            bv, b_null, _ = _as_matrix(tbl.column(b_vec), who="_score_pairs_arrow")
+            if a_null.any() or b_null.any():
+                raise ValueError("_score_pairs_arrow: NULL vector")
             an = tbl.column(a_norm).to_numpy(zero_copy_only=False)
             bn = tbl.column(b_norm).to_numpy(zero_copy_only=False)
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(av.shape[1]):
-                acc = acc + av[:, d] * bv[:, d]
-            cos = acc / (an * bn)
+            cos = _dots(av, bv) / (an * bn)
             yield pa.record_batch(
-                [tbl.column(c) for c in keep]
-                + [pa.array(cos, type=pa.float64())],
-                names=keep + [out],
+                [tbl.column(c) for c in keep] + [pa.array(cos)], names=keep + ["cos"]
             )
 
     return sel.mapInArrow(kernel, schema=out_schema)
@@ -130,166 +142,86 @@ def _score_pairs_arrow(
 
 def _probe_rerank_arrow(
     inv: DataFrame,
-    probe_rows,
+    probes: dict,
     key_cols: list[str],
     id_col: str = "vec_id",
     vec_col: str = "cv",
-    norm_col: str = "_cn",
     assign_matrix: Optional[list[list[float]]] = None,
 ) -> DataFrame:
     """Score every inverted-file row against the queries probing its
     cell, in ONE Arrow pass over the CORPUS rows — (query_id, vec_id,
-    cos) pair rows out.
+    cos) pair rows out, cos = dot / (qn * cn).
 
-    The candidate-pair join this replaces attached a full copy of the
-    query vector to every candidate row, so the scoring stage moved
-    |pairs| x dim vector bytes (JVM -> Python or through codegen'd
-    buffers); here the corpus vectors cross the boundary exactly once
-    and the query set rides the task closure — the same residency
-    contract as the broadcast hash join it replaces (the query side of
-    every top-k API here is already collected/broadcast by design).
-    ``probe_rows`` are collected (query_id, qv, _qn, *key_cols) rows —
-    at most |Q| x n_probe of them.
-
-    Bit-exactness: per (corpus row, query) the dot is accumulated
-    per-DIMENSION in float64 —
-        acc = ((0 + a0*b0) + a1*b1) + ...
-    the exact IEEE sequence of ``aggregate(zip_with(a, b, *), 0.0, +)``
-    — and cos = dot / (qn * cn) with one multiply then one divide, so
-    results are bit-identical to the expression form (pytest-asserted).
-    Self-pairs (vec_id == query_id) are NOT filtered here; callers keep
-    their JVM-side filter.
+    ``probes`` maps a cell key (a tuple over ``key_cols``; ``()`` for
+    brute force) to the (qids, Q, qn) arrays of the queries probing it —
+    at most |Q| x n_probe query rows, riding the task closure (the query
+    side of every top-k API here is collected by design). The corpus
+    vectors cross the boundary once and their norms are computed here.
 
     ``assign_matrix``: when given, ``inv`` carries only (id, vector) and
-    the kernel ALSO computes each row's cell key (dim-loop dots +
-    first-max argmax — the identical values and tie rule of the JVM
-    ``_with_dots``/``_cluster_from_dots`` assignment, so the exact-dup
-    consistency hook is preserved bit-for-bit) and its norm (dim-loop
-    sum of squares + IEEE sqrt = ``_norm``). Assignment + norm + scoring
-    then cost ONE pass over the corpus instead of an interpreted
-    assignment projection feeding a separate scoring stage."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    the kernel also computes each row's cell (first-max argmax over the
+    centroid dots, like ``_assign_arrow``), so assignment and scoring
+    cost one pass over the corpus."""
+    import numpy as np
 
-    # cell key -> (qids int64[m], Q float64[m, dim], qn float64[m])
-    by_key: dict = {}
-    for r in probe_rows:
-        k = tuple(r[c] for c in key_cols)
-        by_key.setdefault(k, []).append(
-            (r["query_id"], [float(x) for x in r["qv"]], float(r["_qn"]))
-        )
-
-    if assign_matrix is not None:
+    C = None if assign_matrix is None else np.asarray(assign_matrix, dtype=np.float64)
+    if C is not None:
         assert len(key_cols) == 1, "in-kernel assignment is single-level"
         sel = inv.select(id_col, vec_col)
     else:
-        sel = inv.select(*key_cols, id_col, vec_col, norm_col)
-    C0 = assign_matrix
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("vec_id", LongType(), False),
-            StructField("cos", DoubleType(), True),
-        ]
-    )
+        sel = inv.select(*key_cols, id_col, vec_col)
 
     def kernel(batches):
         import numpy as np
         import pyarrow as pa
 
-        packed = {
-            k: (
-                np.asarray([q[0] for q in qs], dtype=np.int64),
-                np.asarray([q[1] for q in qs], dtype=np.float64),
-                np.asarray([q[2] for q in qs], dtype=np.float64),
-            )
-            for k, qs in by_key.items()
-        }
-        C = (
-            np.asarray(C0, dtype=np.float64) if C0 is not None else None
-        )
         for tbl in batches:
             n = tbl.num_rows
             if n == 0:
                 continue
-            vecs = tbl.column(vec_col)
-            if vecs.null_count:
+            X, null, _ = _as_matrix(tbl.column(vec_col), who="_probe_rerank_arrow")
+            if null.any():
                 raise ValueError("_probe_rerank_arrow: NULL corpus vector")
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            dim = len(flat) // n
-            X = flat.reshape(n, dim).astype(np.float64, copy=False)
+            cns = np.sqrt(_dots(X, X))
             vids = tbl.column(id_col).to_numpy(zero_copy_only=False)
             if C is not None:
-                # in-kernel assignment + norm: same dim-loop float64
-                # sequence as the JVM expressions (argmax = first max,
-                # like array_position)
-                dots = np.zeros((n, C.shape[0]), dtype=np.float64)
-                sq = np.zeros(n, dtype=np.float64)
-                for d in range(dim):
-                    dots = dots + X[:, d : d + 1] * C[:, d][None, :]
-                    sq = sq + X[:, d] * X[:, d]
-                assigned = np.argmax(dots, axis=1)
-                cns = np.sqrt(sq)
-                groups: dict = {}
-                for c in np.unique(assigned):
-                    groups[(int(c),)] = np.nonzero(assigned == c)[0].tolist()
+                keys = [np.argmax(_dots(X[:, None], C[None]), axis=1)]
             else:
-                cns = tbl.column(norm_col).to_numpy(zero_copy_only=False)
-                if key_cols:
-                    keys = [
-                        tbl.column(c).to_numpy(zero_copy_only=False)
-                        for c in key_cols
-                    ]
-                    row_keys = list(zip(*[k.tolist() for k in keys]))
-                    groups = {}
-                    for i, k in enumerate(row_keys):
-                        groups.setdefault(k, []).append(i)
-                else:
-                    groups = {(): list(range(n))}
+                keys = [tbl.column(c).to_numpy(zero_copy_only=False) for c in key_cols]
+            groups: dict = {}
+            rows = zip(*(k.tolist() for k in keys)) if keys else [()] * n
+            for i, k in enumerate(rows):
+                groups.setdefault(k, []).append(i)
             out_q, out_v, out_c = [], [], []
             for k, idxs in groups.items():
-                qpack = packed.get(k)
-                if qpack is None:
+                if k not in probes:
                     continue
-                qids, Q, qn = qpack
+                qids, Q, qn = probes[k]
                 ix = np.asarray(idxs, dtype=np.int64)
-                Xg = X[ix]
-                acc = np.zeros((len(ix), len(qids)), dtype=np.float64)
-                for d in range(dim):
-                    acc = acc + Xg[:, d : d + 1] * Q[:, d][None, :]
-                cos = acc / (qn[None, :] * cns[ix][:, None])
-                m = len(qids)
+                cos = _dots(X[ix][:, None], Q[None]) / (qn[None, :] * cns[ix][:, None])
                 out_q.append(np.tile(qids, len(ix)))
-                out_v.append(np.repeat(vids[ix], m))
+                out_v.append(np.repeat(vids[ix], len(qids)))
                 out_c.append(cos.reshape(-1))
             if not out_q:
                 continue
             yield pa.record_batch(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_v), type=pa.int64()),
-                    pa.array(np.concatenate(out_c), type=pa.float64()),
-                ],
+                [pa.array(np.concatenate(a)) for a in (out_q, out_v, out_c)],
                 names=["query_id", "vec_id", "cos"],
             )
 
-    return sel.mapInArrow(kernel, schema=out_schema)
+    return sel.mapInArrow(kernel, schema="query_id long, vec_id long, cos double")
 
 
 def _assign_arrow(
-    df: DataFrame,
-    matrix: list[list[float]],
-    id_col: str,
-    vec_col: str,
+    df: DataFrame, matrix: list[list[float]], id_col: str, vec_col: str,
     out_col: str = "cluster",
 ) -> DataFrame:
     """(id, vector, cell) in ONE Arrow pass — nearest-centroid assignment
-    with the identical float64 dim-loop dots and first-max argmax of the
-    JVM ``_with_dots``/``_cluster_from_dots`` pair (bit-identical cells,
-    so index-vs-probe consistency is unchanged); NULL vectors get a NULL
-    cell like the expression form. Replaces an interpreted per-row
-    projection costing ~n_centroids × dim lambda evaluations per row."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    by dot product, first max on ties (NaN counts as the max); NULL
+    vectors get a NULL cell."""
+    import numpy as np
 
+    C = np.asarray(matrix, dtype=np.float64)
     in_schema = df.select(id_col, vec_col).schema
     out_schema = StructType(
         list(in_schema.fields) + [StructField(out_col, IntegerType(), True)]
@@ -299,102 +231,114 @@ def _assign_arrow(
         import numpy as np
         import pyarrow as pa
 
-        C = np.asarray(matrix, dtype=np.float64)
         for tbl in batches:
-            n = tbl.num_rows
-            if n == 0:
+            if tbl.num_rows == 0:
                 continue
-            vecs = tbl.column(vec_col)
-            if vecs.null_count:
-                valid = ~vecs.is_null().to_numpy(zero_copy_only=False)
-                dense = vecs.filter(pa.array(valid))
-            else:
-                valid = None
-                dense = vecs
-            m = len(dense)
-            cells = np.full(n, -1, dtype=np.int64)
-            if m:
-                flat = dense.flatten().to_numpy(zero_copy_only=False)
-                dim = len(flat) // m
-                X = flat.reshape(m, dim).astype(np.float64, copy=False)
-                dots = np.zeros((m, C.shape[0]), dtype=np.float64)
-                for d in range(dim):
-                    dots = dots + X[:, d : d + 1] * C[:, d][None, :]
-                a = np.argmax(dots, axis=1)
-                if valid is None:
-                    cells = a
-                else:
-                    cells[valid] = a
-            out_cells = pa.array(
-                [None if c < 0 else int(c) for c in cells],
-                type=pa.int32(),
-            )
+            X, null, _ = _as_matrix(tbl.column(vec_col), who="_assign_arrow")
+            cells = np.argmax(_dots(X[:, None], C[None]), axis=1)
+            cell = pa.array(cells.astype(np.int32), mask=null)
             yield pa.record_batch(
-                [tbl.column(id_col), tbl.column(vec_col), out_cells],
+                [tbl.column(id_col), tbl.column(vec_col), cell],
                 names=[id_col, vec_col, out_col],
             )
 
     return df.select(id_col, vec_col).mapInArrow(kernel, schema=out_schema)
 
 
-def _with_matrix(df: DataFrame, matrix: list[list[float]], col: str) -> DataFrame:
-    """Attach a plane/centroid matrix to every row as ONE
-    array<array<double>> column via a broadcast single-row cross join.
-
-    Why not literals (VERDICT r3 #1): embedding the matrix as
-    ``rows × dim`` literal doubles puts 10^5-10^6 expression nodes into
-    the plan at production dims (768-4096) — plan build/serialize time
-    and codegen limits become the bottleneck before any data moves. The
-    broadcast column puts ONE attribute reference in the plan; the values
-    ride the (tiny) broadcast relation. Arithmetic is unchanged — same
-    zip_with/aggregate per plane, same left-to-right order — so results
-    are bit-identical to the literal form.
-
-    ``col`` must not collide with an input column (ADVICE r4: a user
-    frame already carrying e.g. ``_cents`` would make the cross join
-    ambiguous, and the caller's later ``drop(col)`` would silently
-    remove the user's data)."""
-    if col in df.columns:
-        raise ValueError(
-            f"internal matrix column {col!r} collides with an input "
-            f"column — rename it in the input DataFrame"
-        )
-    schema = StructType(
-        [StructField(col, ArrayType(ArrayType(DoubleType(), False), False), False)]
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cos, rank): self-pairs dropped, then the k best
+    per query by cos desc, ties by vec_id asc; cos rounded to 6 places."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
     )
-    one = df.sparkSession.createDataFrame(
-        [([[float(x) for x in row] for row in matrix],)], schema
+    return (
+        scored.filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
     )
-    return df.crossJoin(F.broadcast(one))
+
+
+# ---------------------------------------------------------------------------
+# the collected query side — ranked on the driver
+# ---------------------------------------------------------------------------
+
+
+def _query_side(queries: DataFrame, id_col: str, vec_col: str):
+    """(qids int64[q], Q float64[q, dim], qn float64[q]) — one row per
+    query whose vector is non-NULL with no NULL element; the others can
+    never match and are skipped. |Q| rows on the driver: every top-k API
+    here collects its query side by design."""
+    import numpy as np
+
+    tbl = queries.select(F.col(id_col).alias("q"), F.col(vec_col).alias("v")).toArrow()
+    X, null, holes = _as_matrix(tbl.column("v"), who="query side")
+    keep = ~(null | holes)
+    qids = tbl.column("q").to_numpy()[keep].astype(np.int64)
+    Q = X[keep]
+    return qids, Q, np.sqrt(_dots(Q, Q))
+
+
+def _group_probes(qs, probed) -> dict:
+    """{cell key: (qids, Q, qn)} from per-query lists of probed keys."""
+    groups: dict = {}
+    for i, keys in enumerate(probed):
+        for key in keys:
+            groups.setdefault(key, []).append(i)
+    return {key: tuple(a[ix] for a in qs) for key, ix in groups.items()}
+
+
+def _flat_probes(qs, cents: list[list[float]], n_probe: int) -> dict:
+    """{(cell,): queries} — each query probes the ``n_probe`` cells with
+    the highest dot (ties to the lower cell)."""
+    import numpy as np
+
+    D = _dots(qs[1][:, None], np.asarray(cents, dtype=np.float64)[None])
+    return _group_probes(qs, [[(int(c),) for c in _ranked(d)[:n_probe]] for d in D])
+
+
+def _fine_rows(fine: DataFrame, coarse_ids: list[int]) -> DataFrame:
+    """The fine-centroid rows of the given coarse cells only."""
+    return fine.filter(F.col("coarse_id").isin(coarse_ids))
+
+
+def _two_level_probes(
+    qs, index: "TwoLevelIVF", n_probe_coarse: int, n_probe_fine: int
+) -> dict:
+    """{(coarse_id, fine_id): queries} — each query keeps its
+    ``n_probe_coarse`` best coarse cells (dot desc, cell asc), then the
+    ``n_probe_fine`` best fine centroids inside them (fdot desc, coarse
+    asc, fine asc).
+
+    Driver-resident fine state is bounded: only the fine rows of probed
+    coarse cells are collected — at most min(|Q| × n_probe_coarse,
+    k_coarse) rows of ≤ k_fine × dim doubles. The full fine frame (the
+    whole k_coarse × k_fine centroid set) never leaves the executors."""
+    import numpy as np
+
+    Q = qs[1]
+    D = _dots(Q[:, None], np.asarray(index.coarse, dtype=np.float64)[None])
+    top = [_ranked(d)[:n_probe_coarse].tolist() for d in D]
+    probed = sorted({c for t in top for c in t})
+    fines = {
+        r["coarse_id"]: np.asarray(r["fines"], dtype=np.float64)
+        for r in (_fine_rows(index.fine, probed).collect() if probed else [])
+    }
+    out = []
+    for q, cells in zip(Q, top):
+        cand = [(c, f) for c in cells if c in fines for f in range(len(fines[c]))]
+        if not cand:
+            out.append([])
+            continue
+        fd = np.concatenate([_dots(q, fines[c]) for c in cells if c in fines])
+        cs, fs = (np.asarray(v) for v in zip(*cand))
+        out.append([cand[i] for i in _ranked(fd, cs, fs)[:n_probe_fine]])
+    return _group_probes(qs, out)
+
 
 # ---------------------------------------------------------------------------
 # exact cosine
 # ---------------------------------------------------------------------------
-
-
-def _f64(a):
-    # float32 embeddings are promoted to float64 BEFORE any arithmetic:
-    # per-term float32 rounding otherwise makes results engine-dependent
-    # (observed: 1-ulp diffs vs DuckDB at the 6th decimal)
-    return F.transform(a, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(_f64(a), _f64(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(_f64(a), F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_force_topk(
@@ -404,35 +348,17 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine: (query_id, vec_id, cos, rank).
-    Ties broken by vec_id for determinism. Queries broadcast."""
-    # norms once per row, dot per pair (same values/order as the inline
-    # cosine — see ivf_topk)
-    # query side collected — the r5 form broadcast it (same residency);
-    # the corpus crosses the boundary ONCE and the |Q| x N pair explosion
-    # happens inside the Arrow kernel
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    ).collect()
-    # norms AFTER the spread so the per-row fold runs at full parallelism
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(c, q_rows, []).filter(
-        F.col("vec_id") != F.col("query_id")
+    """Exact top-k by cosine: (query_id, vec_id, cos, rank). Ties broken
+    by vec_id for determinism. The query side is collected (queries with
+    a NULL vector or element are skipped); the corpus crosses the
+    boundary once and the |Q| x N pair explosion happens in the kernel."""
+    qs = _query_side(queries, id_col, vec_col)
+    c = spread_to_parallelism(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
+        min_bytes=0,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    probes = _group_probes(qs, [[()]] * len(qs[0]))
+    return _topk(_probe_rerank_arrow(c, probes, []), k)
 
 
 # ---------------------------------------------------------------------------
@@ -443,10 +369,8 @@ def brute_force_topk(
 def _plane_matrix(num_planes: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes in [-1, 1), derived from
     sha256(plane, dim_index) — reproducible across runs/engines with no
-    driver RNG state. Computed ONCE on the driver (removing the per-row ×
-    per-plane × per-dim hash calls round 1 paid, VERDICT r1 #3) and
-    shipped via ``_with_matrix`` as one broadcast array column (removing
-    the per-cell plan literals round 3 flagged, VERDICT r3 #1)."""
+    driver RNG state. Computed ONCE on the driver and shipped in the
+    signature kernel's closure."""
     import hashlib
 
     return [
@@ -469,108 +393,65 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"])
 
 
-def _checked_vec(vec_col: str, dim: int):
-    """float64 vector with a runtime length fail-fast. Only evaluated for
-    non-NULL vectors (callers guard with isNotNull — NULL embeddings get a
-    NULL signature instead of a hard failure, ADVICE r3: they can never be
-    candidates, so skipping is the correct semantics)."""
-    return F.when(
-        F.size(F.col(vec_col)) == dim, _f64(F.col(vec_col))
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                f"hyperplane_signature: vector length %s != dim={dim}",
-                F.size(F.col(vec_col)),
-            )
-        )
-    )
-
-
-def _signature_from_matrix(vec_col: str, mat_col: str, dim: int):
-    """Sign-bit array from the broadcast plane-matrix COLUMN: one
-    ``transform`` over the planes array — the plan carries a single
-    attribute reference however large num_planes × dim gets.
-
-    The length-checked float64 vector is bound ONCE per row via the
-    outer transform's lambda variable instead of being re-derived
-    inside every plane's zip_with (the r5 form re-ran the cast/check
-    array build num_planes times per row — a third of signature CPU
-    plus an ArrayData allocation per plane, measured r6)."""
-
-    def sig(v):
-        def bit(p):
-            proj = F.aggregate(
-                F.zip_with(v, p, lambda x, wi: x * wi),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-            return F.when(proj >= 0, 1).otherwise(0)
-
-        return F.transform(F.col(mat_col), bit)
-
-    # no otherwise(): NULL vector → NULL signature → drops out of banding
-    # (transform over a single-element wrapper array = a let-binding for
-    # the checked vector; values/fold order unchanged)
-    return F.when(
-        F.col(vec_col).isNotNull(),
-        F.element_at(
-            F.transform(F.array(_checked_vec(vec_col, dim)), sig), 1
-        ),
-    )
-
-
 def with_hyperplane_signature(
     df: DataFrame,
     vec_col: str = "embedding",
     out_col: str = "sig",
     num_planes: int = 16,
     dim: Optional[int] = None,
+    norm_col: Optional[str] = None,
 ) -> DataFrame:
-    """df + hyperplane sign-bit signature column, planes shipped via the
-    broadcast matrix column (see ``_with_matrix``) — the plan-bounded
-    form all internal callers use (VERDICT r3 #1)."""
+    """df + ``out_col``, an array<int> of ``num_planes`` sign bits
+    (bit p = v · plane_p >= 0), computed in ONE Arrow pass; with
+    ``norm_col`` the same pass also emits the vector norm.
+
+    * NULL vector → NULL signature (it can never be a candidate, and
+      banding skips it) and NULL norm.
+    * NULL element → all-zero bits and NULL norm.
+    * NaN projection → bit 1 (Spark orders NaN above every number).
+    * a non-NULL vector whose length is not ``dim`` raises: a wrong dim
+      would otherwise put every row into one LSH bucket.
+
+    The plane matrix rides the task closure, so the plan stays O(1) in
+    num_planes × dim."""
+    import numpy as np
+
     dim = dim if dim is not None else _infer_dim(df, vec_col)
-    d = _with_matrix(df, _plane_matrix(num_planes, dim), "_planes")
-    return d.withColumn(
-        out_col, _signature_from_matrix(vec_col, "_planes", dim)
-    ).drop("_planes")
+    P = np.asarray(_plane_matrix(num_planes, dim), dtype=np.float64)
+    fields = list(df.schema.fields) + [
+        StructField(out_col, ArrayType(IntegerType(), False), True)
+    ]
+    if norm_col is not None:
+        fields.append(StructField(norm_col, DoubleType(), True))
+    names = [f.name for f in fields]
 
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
 
-def hyperplane_signature(vec_col: str, num_planes: int, dim: int):
-    """Array<int> of num_planes sign bits: sign(v · plane_p), each plane a
-    literal weight array. INLINE form for small dims / ad-hoc column use —
-    plans carry num_planes × dim literal nodes, so at production embedding
-    dims (768+) use ``with_hyperplane_signature`` (broadcast matrix column,
-    one plan node) instead; internal callers all do.
+        for tbl in batches:
+            n = tbl.num_rows
+            X, null, holes = _as_matrix(tbl.column(vec_col), dim, "hyperplane_signature")
+            proj = _dots(X[:, None], P[None])
+            bits = ((proj >= 0) | np.isnan(proj)) & ~holes[:, None]
+            sig = pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int32) * num_planes),
+                pa.array(bits.astype(np.int32).reshape(-1)),
+                mask=pa.array(null),
+            )
+            cols = list(tbl.columns) + [sig]
+            if norm_col is not None:
+                cols.append(pa.array(np.sqrt(_dots(X, X)), mask=null | holes))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    ``dim`` is REQUIRED (ADVICE r2): a too-small dim silently NULL-pads the
-    zip_with projection, every sign bit falls to the otherwise(0) branch,
-    and all rows hash to one LSH bucket — correct results (exact re-rank)
-    but a degenerate full cross join. The expression fail-fasts at runtime
-    on any non-NULL row whose vector length != dim; NULL vectors yield a
-    NULL signature (ADVICE r3)."""
-    planes = _plane_matrix(num_planes, dim)
-
-    def bit(p: int):
-        w = F.array(*[F.lit(x) for x in planes[p]])
-        proj = F.aggregate(
-            F.zip_with(_checked_vec(vec_col, dim), w, lambda x, wi: x * wi),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        return F.when(proj >= 0, 1).otherwise(0)
-
-    return F.when(
-        F.col(vec_col).isNotNull(),
-        F.array(*[bit(p) for p in range(num_planes)]),
-    )
+    return df.mapInArrow(kernel, schema=StructType(fields))
 
 
 def _explode_bands(df: DataFrame, bands: int, r: int, *keep: str) -> DataFrame:
     """(keep…, band, bucket) rows: one per signature band, bucket =
-    xxhash64 of the band's sign bits. NULL signatures (NULL embeddings,
-    ADVICE r3) are dropped here — they can never be candidates, and
-    banding them would funnel every NULL row into one hot bucket."""
+    xxhash64 of the band's sign bits. NULL signatures (NULL embeddings)
+    are dropped here — they can never be candidates, and banding them
+    would funnel every NULL row into one hot bucket."""
     df = df.filter(F.col("sig").isNotNull())
     return df.select(
         *keep,
@@ -607,93 +488,30 @@ def lsh_topk(
     r = num_planes // bands
     dim = dim if dim is not None else _infer_dim(corpus, vec_col)
 
-    def with_bands(df, id_alias, vec_alias):
+    def with_bands(df, id_as, vec_as, norm_as):
+        vecs = df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as))
         sig = with_hyperplane_signature(
-            _spread(
-                df.select(
-                    F.col(id_col).alias(id_alias),
-                    F.col(vec_col).alias(vec_alias),
-                )
-            ),
-            vec_alias,
-            "sig",
-            num_planes,
-            dim,
+            spread_to_parallelism(vecs, min_bytes=0),
+            vec_as, "sig", num_planes, dim, norm_col=norm_as,
         )
-        return _explode_bands(sig, bands, r, id_alias, vec_alias)
+        return _explode_bands(sig, bands, r, id_as, vec_as, norm_as)
 
-    cq = with_bands(queries, "query_id", "qv")
-    cc = with_bands(corpus, "vec_id", "cv")
+    cq = with_bands(queries, "query_id", "qv", "_qn")
+    cc = with_bands(corpus, "vec_id", "cv", "_cn")
     cand = (
         cq.join(cc, ["band", "bucket"])
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qv", "vec_id", "cv")
+        .select("query_id", "qv", "_qn", "vec_id", "cv", "_cn")
         .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("_qn", _norm(F.col("qv")))
-        .withColumn("_cn", _norm(F.col("cv")))
     )
-    scored = _score_pairs_arrow(
-        cand, ["query_id", "vec_id"], "qv", "cv", "_qn", "_cn"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    return _topk(
+        _score_pairs_arrow(cand, ["query_id", "vec_id"], "qv", "cv", "_qn", "_cn"), k
     )
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — k-means coarse quantizer + probed clusters
 # ---------------------------------------------------------------------------
-
-
-def _dots_from_matrix(vec_col: str, mat_col: str) -> Column:
-    """Array of dot products v · centroid_c over the broadcast centroid
-    matrix column — one ``transform``, one plan node regardless of
-    n_centroids × dim (VERDICT r3 #1; the literal-array form was
-    10^5-10^6 plan nodes at n_centroids ~ sqrt(N), dim 768+).
-
-    The float64 cast of the vector is bound once per ROW (transform
-    over a single-element wrapper array = a let-binding), not re-built
-    inside every centroid's zip_with as in r5 — same values, same fold
-    order, one cast-array allocation instead of n_centroids."""
-
-    def dots(v):
-        return F.transform(
-            F.col(mat_col),
-            lambda c: F.aggregate(
-                F.zip_with(v, c, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ),
-        )
-
-    return F.element_at(
-        F.transform(F.array(_f64(F.col(vec_col))), dots), 1
-    )
-
-
-def _with_dots(
-    df: DataFrame, matrix: list[list[float]], vec_col: str, out_col: str
-) -> DataFrame:
-    """df + an array<double> column of v · centroid_c dots via the
-    broadcast one-row matrix relation (plan-bounded at any
-    n_centroids × dim — VERDICT r3 #1). A separate ``withColumn`` step
-    keeps the (non-cheap) dots expression evaluated once even when a
-    downstream argmax references it twice (CollapseProject does not
-    inline non-cheap expressions)."""
-    d = _with_matrix(df, matrix, "_cents")
-    return d.withColumn(out_col, _dots_from_matrix(vec_col, "_cents")).drop(
-        "_cents"
-    )
-
-
-def _cluster_from_dots(dots: Column) -> Column:
-    # array_position is 1-based; ties resolve to the first max (deterministic)
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
 def train_ivf_centroids(
@@ -706,22 +524,13 @@ def train_ivf_centroids(
     seed: int = 7,
     n_rows: Optional[int] = None,
 ) -> list[list[float]]:
-    """Deterministic mini k-means (spherical-ish, dot-product assignment):
-    init = the n_centroids vectors with the smallest xxhash64(id) (a
-    deterministic pseudo-random pick), then ``iters`` Lloyd steps where
-    the recompute is a posexplode → groupBy(cluster, dim) mean.
-
-    SAMPLE-BASED (VERDICT r2 #1): the quantizer needs representativeness,
-    not the full table, so training runs over a seeded Bernoulli sample
-    bounded by ``sample_cap`` rows (one column-pruned count picks the
-    fraction). The sample is **persisted once** and reused by the init
-    scan and every Lloyd step — without that, ``sample()`` re-scans the
-    full corpus per action and at 10^12 rows quantizer training would
-    dominate the query it accelerates. Tables at or under ``sample_cap``
-    train exactly as before (fraction 1, no behavior change at test SFs).
-    The centroid matrix (n_centroids × dim doubles) lives on the driver
-    and enters plans as ONE broadcast array column (``_with_matrix``).
-    ``sample_cap=None`` disables sampling (full-corpus audit mode)."""
+    """Deterministic mini k-means (dot-product assignment): init = the
+    n_centroids vectors with the smallest xxhash64(id), then ``iters``
+    Lloyd steps, each ONE Arrow pass of per-task partial sums merged on
+    the driver. Training runs over a seeded Bernoulli sample of at most
+    ``sample_cap`` rows (``None``: every row), persisted once — otherwise
+    ``sample()`` re-scans the corpus per action and at 10^12 rows
+    training would dominate the query it accelerates."""
     train = corpus.select(id_col, vec_col)
     sampled = False
     if sample_cap is not None:
@@ -736,26 +545,12 @@ def train_ivf_centroids(
         # spread BEFORE persisting: the init sort and every Lloyd
         # assignment run over the cached partitions, and a few-MB
         # embedding table otherwise caches as 1-2 blocks (1-2 cores)
-        train = _spread(train).persist()
+        train = spread_to_parallelism(train, min_bytes=0).persist()
     init_rows = (
-        train.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(n_centroids)
-        .collect()
+        train.select(vec_col).orderBy(F.xxhash64(id_col)).limit(n_centroids).collect()
     )
     centroids = [[float(x) for x in r[vec_col]] for r in init_rows]
-    dim = len(centroids[0]) if centroids else 0
     for _ in range(iters):
-        # Lloyd step as ONE Arrow pass emitting per-task partial
-        # (cluster, count, sum-vector) rows — ≤ tasks × k rows collected
-        # and merged driver-side. The r5 form ran the assignment through
-        # interpreted zip_with/aggregate folds plus dim Average
-        # aggregates (~1.2-1.7 s per step at 20k × 64 on 32 cores,
-        # measured r6); the kernel does the same argmax assignment and
-        # float64 sums at numpy speed. Assignment CONSISTENCY between
-        # the inverted file and the probe side is what the exact-dup
-        # oracle relies on, and both still use the same JVM expression —
-        # training only produces the centroid values.
         by_c = _lloyd_partials_arrow(train, centroids, vec_col)
         centroids = [
             by_c[c] if c in by_c else centroids[c] for c in range(n_centroids)
@@ -768,7 +563,8 @@ def _lloyd_partials_arrow(
     train: DataFrame, centroids: list[list[float]], vec_col: str
 ) -> dict:
     """One Lloyd recompute: {cluster: mean vector} for non-empty
-    clusters, from per-task partial sums merged on the driver."""
+    clusters, from per-task partial sums merged on the driver. Vectors
+    that are NULL or hold a NULL element do not train."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -781,16 +577,11 @@ def _lloyd_partials_arrow(
         sums = np.zeros((k, dim), dtype=np.float64)
         counts = np.zeros(k, dtype=np.int64)
         for tbl in batches:
-            arr = tbl.column(vec_col)
-            if arr.null_count:
-                keep = ~arr.is_null().to_numpy(zero_copy_only=False)
-                arr = arr.filter(pa.array(keep))
-            n = len(arr)
-            if n == 0:
+            X, null, holes = _as_matrix(tbl.column(vec_col), who="train_ivf_centroids")
+            X = X[~(null | holes)]
+            if len(X) == 0:
                 continue
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            X = flat.reshape(n, -1).astype(np.float64, copy=False)
-            a = np.argmax(X @ C.T, axis=1)
+            a = np.argmax(_dots(X[:, None], C[None]), axis=1)
             for c in np.unique(a):
                 m = a == c
                 sums[c] += X[m].sum(axis=0)
@@ -799,11 +590,8 @@ def _lloyd_partials_arrow(
         if len(nz) == 0:
             return
         yield pa.record_batch(
-            [
-                pa.array(nz.astype("int32")),
-                pa.array(counts[nz]),
-                pa.array(list(sums[nz]), type=pa.list_(pa.float64())),
-            ],
+            [pa.array(nz.astype("int32")), pa.array(counts[nz]),
+             pa.array(list(sums[nz]), type=pa.list_(pa.float64()))],
             names=["c", "n", "s"],
         )
 
@@ -816,42 +604,6 @@ def _lloyd_partials_arrow(
         s = np.asarray(r["s"], dtype=np.float64)
         agg[r["c"]] = (n0 + r["n"], s if s0 is None else s0 + s)
     return {c: [float(x) for x in s / n] for c, (n, s) in agg.items()}
-
-
-def _collect_probes(
-    queries: DataFrame,
-    cents: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-    key_cols: list[str],
-) -> list[dict]:
-    """Collected probe rows [{query_id, qv, _qn, <key>}] — one row per
-    (query, probed cell). Dots come from the same broadcast-matrix JVM
-    expression as the corpus assignment (the exact-dup consistency hook);
-    ranking the n_centroids-long array happens driver-side with the
-    probe window's exact tie rule (dot desc, cell asc)."""
-    qrows = _with_dots(queries, cents, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.col("_dots"),
-    ).collect()
-    key = key_cols[0]
-    out = []
-    for r in qrows:
-        dots = r["_dots"]
-        if dots is None:  # NULL vector — never probed (matches the
-            continue      # posexplode-of-NULL behavior)
-        ranked = [c for c in range(len(dots)) if dots[c] is not None]
-        ranked.sort(key=lambda c: (-dots[c], c))
-        # NULL dots rank last (desc nulls-last), cell-asc among themselves
-        ranked += [c for c in range(len(dots)) if dots[c] is None]
-        for c in ranked[:n_probe]:
-            out.append(
-                {"query_id": r["query_id"], "qv": r["qv"], "_qn": r["_qn"], key: c}
-            )
-    return out
 
 
 def ivf_topk(
@@ -870,48 +622,18 @@ def ivf_topk(
     file); each query probes its ``n_probe`` nearest centroids and exact
     cosine re-ranks only those buckets. Identical vectors always land in
     (and probe) the same bucket, so exact-duplicate queries have recall 1
-    by construction — the deterministic-oracle hook.
-
-    Scale: the corpus assignment is one column expression (pruned scan +
-    shuffle on cluster id when persisted as a bucketed table); probing
-    replaces the O(N) scan per query with O(N · n_probe / n_centroids)."""
+    by construction — the deterministic-oracle hook. Corpus assignment,
+    norm and scoring share one pass over the corpus."""
     cents = centroids if centroids is not None else train_ivf_centroids(
         corpus, n_centroids, id_col, vec_col, iters, sample_cap=sample_cap
     )
-    n_centroids = len(cents)
-    # corpus assignment and query dot arrays via _with_dots (broadcast
-    # matrix column — plan-bounded at any n_centroids × dim)
-    # per-vector norms are computed ONCE per row (corpus side in the
-    # scan/assignment stage, query side before the probe window) and the
-    # re-rank pays only the dot per candidate pair — cos stays
-    # dot/(qn*cn), the same values in the same order as the inline form,
-    # at a third of the per-pair expression work (measured r6).
-    # query → n_probe nearest centroids: the dot arrays are collected
-    # (|Q| rows — the already-broadcast query side) and ranked in plain
-    # python with the window's exact tie rule (dot desc, cluster asc) —
-    # one driver action instead of explode + window + shuffle
-    probe_rows = _collect_probes(
-        queries, cents, id_col, vec_col, n_probe, ["cluster"]
+    probes = _flat_probes(_query_side(queries, id_col, vec_col), cents, n_probe)
+    inv = spread_to_parallelism(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
+        min_bytes=0,
     )
-
-    # assignment + norm + scoring fused into the re-rank kernel's single
-    # corpus pass (assign_matrix): the interpreted per-row dots
-    # projection disappears; values/tie rule identical (see kernel doc)
-    inv = _spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-    )
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["cluster"], assign_matrix=cents
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
+    return _topk(
+        _probe_rerank_arrow(inv, probes, ["cluster"], assign_matrix=cents), k
     )
 
 
@@ -933,21 +655,15 @@ def write_ivf_index(
     clusters lists and reads ONLY those 4 directories — at 10^12 vectors
     the difference between scanning ~0.4% and 100% of the index. On
     Iceberg the same layout is a ``PARTITIONED BY (cluster)`` table and
-    the pruning is manifest-level. Assignment via the ``_assign_arrow``
-    kernel (bit-identical cells to the JVM expression form at numpy
-    speed)."""
+    the pruning is manifest-level. Assignment runs pre-shuffle at full
+    width; the shuffle on the partition key then writes ONE file per
+    cluster instead of writers x clusters small files (guide §6)."""
     inv = _assign_arrow(
-        _spread(corpus.select(id_col, vec_col)), centroids, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        "cluster",
-    )
-    # cluster assignment runs pre-shuffle at full width; the shuffle on
-    # the partition key then gives ONE file per cluster per writer
-    # instead of writers x clusters small files (256 -> 8 at the bench
-    # shape — commit time and read-side open cost both drop; guide §6's
-    # cluster-by-partition-key-before-write pattern)
+        spread_to_parallelism(corpus.select(id_col, vec_col), min_bytes=0),
+        centroids,
+        id_col,
+        vec_col,
+    ).select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"), "cluster")
     inv.repartition("cluster").write.partitionBy("cluster").mode(
         "overwrite"
     ).parquet(path)
@@ -967,52 +683,35 @@ def ivf_topk_indexed(
 
     The set of probed clusters across ALL queries is at most
     ``n_centroids`` values (tiny, independent of query count), so it is
-    collected and pushed as a literal ``cluster IN (...)`` filter — the
-    scan's PartitionFilters then skip every unprobed directory at file-
-    listing time (plan-shape asserted in tests). Dynamic partition
-    pruning would achieve the same lazily; the static form is verifiable
-    in the plan and engine-portable. Results are identical to
+    pushed as a literal ``cluster IN (...)`` filter — the scan's
+    PartitionFilters then skip every unprobed directory at file-listing
+    time (plan-shape asserted in tests). Results are identical to
     ``ivf_topk`` with the same centroids (parity-tested)."""
-    n_centroids = len(centroids)
-    # one collect replaces the r5 eager checkpoint + explode/window +
-    # clusters collect: the query dot arrays are ranked in plain python
-    # with the window's exact tie rule (dot desc, cluster asc), and the
-    # |Q| x n_probe probe set feeds both the static partition filter and
-    # the re-rank kernel's closure
-    probe_rows = _collect_probes(
-        queries, centroids, id_col, vec_col, n_probe, ["cluster"]
+    probes = _flat_probes(_query_side(queries, id_col, vec_col), centroids, n_probe)
+    clusters = sorted(key[0] for key in probes)
+    assert len(clusters) <= len(centroids)
+    inv = spread_to_parallelism(
+        spark.read.parquet(index_path).filter(F.col("cluster").isin(clusters)),
+        min_bytes=0,
     )
-    clusters = sorted({r["cluster"] for r in probe_rows})
-    assert len(clusters) <= n_centroids
-    inv = _spread(
-        spark.read.parquet(index_path).filter(F.col("cluster").isin(clusters))
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(inv, probe_rows, ["cluster"]).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _topk(_probe_rerank_arrow(inv, probes, ["cluster"]), k)
 
 
 def _lsh_params_for_threshold(threshold: float) -> tuple[int, int]:
     """(num_planes, bands) sized to the cosine threshold — textbook LSH
     tuning: the per-band bit count r sets bucket selectivity, and the
     right r grows with the threshold. With p = 1 - acos(t)/π the
-    probability a qualifying pair agrees on one band is p^r and the
+    probability a pair at cosine t agrees on one band is p^r and the
     miss probability over b bands is (1 - p^r)^b.
 
-    * t ≥ 0.999 (near-exact dedup): r = 16 → random-pair collisions
-      ~0.5^16 per band (candidate count stays ~linear in N), while a
-      true pair at t = 0.999 still collides with prob ≥ 1 - 3e-4.
-      The r5 default (r = 4) made EVERY band a 16-bucket hash — ~22% of
-      ALL pairs became candidates, a quadratic blow-up that cost 146 s
-      at sf1.0 (measured; OPTIMIZATION_r06.md).
+    * t ≥ 0.999 (near-exact dedup): (64, 4), r = 16. A random pair
+      collides with probability ~4 · 0.5^16 ≈ 6e-5, so the candidate
+      count stays ~linear in N; r = 4 made ~22% of ALL pairs candidates,
+      a quadratic blow-up that cost 146 s at sf1.0 (OPTIMIZATION_r06.md).
+      The price is recall right at the threshold: a pair at cosine
+      exactly 0.999 is missed with probability 1.8e-3 (r = 4: 1e-5);
+      at 0.9995 the miss rate is 5e-4 and at 0.9999 it is 2e-5. Exact
+      duplicates (cosine 1) are never missed.
     * t < 0.999: the historical (16, 4) — r = 4 keeps recall high for
       genuinely-near (not identical) pairs; selectivity is the caller's
       knob via max bucket tuning/threshold.
@@ -1037,9 +736,7 @@ def embedding_near_duplicates(
     re-attached to the (deduplicated) candidate pairs afterwards, so the
     heavy payload crosses exactly one join instead of riding every
     band-bucket collision through the pair dedup (guide §8: decide with
-    small rows, move big rows once). The pair dedup itself is then a
-    pure-grouping-key aggregate — a HashAggregate, not the SortAggregate
-    the old ``first(vector)`` buffers forced."""
+    small rows, move big rows once)."""
     if num_planes is None and bands is None:
         num_planes, bands = _lsh_params_for_threshold(threshold)
     elif num_planes is None or bands is None:
@@ -1047,22 +744,15 @@ def embedding_near_duplicates(
     assert num_planes % bands == 0
     r = num_planes // bands
     dim = dim if dim is not None else _infer_dim(df, vec_col)
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     sig = with_hyperplane_signature(
-        _spread(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        ),
-        "v",
-        "sig",
-        num_planes,
-        dim,
-    ).withColumn("vn", _norm(F.col("v")))
+        spread_to_parallelism(vecs, min_bytes=0), "v", "sig", num_planes, dim,
+        norm_col="vn",
+    )
     # lineage cut (mirrors dedup.py minhash): the signature feeds the
-    # band rows AND the vector re-attach joins — without it, every
-    # vector's projections are recomputed per consumer (round-1's
-    # slowest query). localCheckpoint, not persist: blocks are GC-scoped
-    # to the returned frame, so repeated calls leave no residue. The
-    # checkpoint also materializes each vector's norm once for the
-    # re-rank (cos = dot/(na*nb), same values/order as inline cosine).
+    # band rows AND the vector re-attach joins — without it the kernel
+    # reruns per consumer. localCheckpoint, not persist: blocks are
+    # GC-scoped to the returned frame, so repeated calls leave no residue.
     sig = sig.localCheckpoint(eager=False)
     bandrows = _explode_bands(sig, bands, r, "id")
     a = bandrows.alias("a")
@@ -1077,13 +767,10 @@ def embedding_near_duplicates(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates()
     )
-    va = sig.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("vn").alias("na"),
-    )
-    vb = sig.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("vn").alias("nb"),
+    va, vb = (
+        sig.select(F.col("id").alias(f"id_{s}"), F.col("v").alias(f"v{s}"),
+                   F.col("vn").alias(f"n{s}"))
+        for s in "ab"
     )
     pairs = cand.join(va, "id_a").join(vb, "id_b")
     return (
@@ -1094,7 +781,7 @@ def embedding_near_duplicates(
 
 
 # ---------------------------------------------------------------------------
-# two-level IVF — driver state bounded at O(k_coarse × dim) (VERDICT r4 #2)
+# two-level IVF — driver state bounded at O(k_coarse × dim)
 # ---------------------------------------------------------------------------
 
 
@@ -1102,13 +789,9 @@ class TwoLevelIVF(NamedTuple):
     """The two-level quantizer. ``coarse`` (k_coarse × dim doubles) is
     the ONLY driver-resident state; ``fine`` is a DataFrame with one row
     per coarse cell — (coarse_id int, fines array<array<double>>, the
-    cell's ≤ k_fine fine centroids) — that is never collected. Effective
-    cell count is k_coarse × k_fine with driver/broadcast residency
-    independent of k_fine: at the production heuristic
-    n_cells ≈ sqrt(N) with N = 10^12 and dim 1024, the flat quantizer's
-    10^6 × 1024 doubles (~8 GB) of driver+broadcast state shrinks to
-    k_coarse × 1024 (~8 MB), and fine state rides executors as ordinary
-    partitioned rows."""
+    cell's ≤ k_fine fine centroids) — that is never collected whole. At
+    n_cells ≈ sqrt(10^12) and dim 1024 the flat quantizer's ~8 GB of
+    driver state shrinks to k_coarse × 1024 doubles (~8 MB)."""
 
     coarse: list[list[float]]
     fine: DataFrame
@@ -1126,38 +809,31 @@ def train_ivf_two_level(
 ) -> TwoLevelIVF:
     """Train the two-level quantizer.
 
-    Level 1 reuses ``train_ivf_centroids`` (sampled, driver-bounded —
-    k_coarse stays ~10^3 at any corpus size). Level 2 trains each coarse
+    Level 1 is ``train_ivf_centroids``. Level 2 trains each coarse
     cell's fine centroids WHERE THE DATA LIVES: the sample is assigned
-    to coarse cells via the broadcast matrix column, then ONE
-    ``applyInPandas`` over ``groupBy(coarse_id)`` runs a small
-    deterministic numpy k-means per cell (init = the k_fine rows with
-    the smallest xxhash64(id), dot-product assignment, float64 means
-    over hash-sorted rows — reproducible under any partitioning). No
-    per-cell driver collect exists anywhere: the flat trainer's Lloyd
-    ``collect()`` of n_centroids × dim mean rows — the 10^9-row wall at
-    n_centroids = sqrt(10^12) — is gone.
-
-    The fine frame is eagerly local-checkpointed (k_coarse rows): the
-    kernel runs exactly once, downstream joins read materialized blocks,
-    and the blocks are GC-reclaimed with the returned handle."""
+    to coarse cells, then ONE ``applyInPandas`` over ``groupBy(coarse_id)``
+    runs a small deterministic k-means per cell (init = the k_fine rows
+    with the smallest xxhash64(id); means over hash-sorted rows, so any
+    partitioning gives the same result). The fine frame (k_coarse rows)
+    is eagerly local-checkpointed: the kernel runs once and the blocks
+    are GC-reclaimed with the returned handle."""
     import pandas as pd  # noqa: F401 — applyInPandas contract
 
-    # one corpus count serves both the coarse trainer's sampling decision
-    # and the fine-level sample below (was two identical count actions)
+    # one count serves the coarse trainer's and the fine-level sample
     n = corpus.select(id_col).count() if sample_cap is not None else None
     coarse = train_ivf_centroids(
         corpus, k_coarse, id_col, vec_col, iters, sample_cap, seed, n_rows=n
     )
     train = corpus.select(id_col, vec_col)
-    if sample_cap is not None:
-        if n > sample_cap:
-            train = train.sample(fraction=min(1.0, 1.1 * sample_cap / n), seed=seed)
-    assigned = _with_dots(_spread(train), coarse, vec_col, "_dots").select(
-        _cluster_from_dots(F.col("_dots")).alias("coarse_id"),
-        _f64(F.col(vec_col)).alias("_v"),
-        F.xxhash64(F.col(id_col)).alias("_h"),
-    )
+    if sample_cap is not None and n > sample_cap:
+        train = train.sample(fraction=min(1.0, 1.1 * sample_cap / n), seed=seed)
+    assigned = _assign_arrow(
+        spread_to_parallelism(train, min_bytes=0),
+        coarse,
+        id_col,
+        vec_col,
+        out_col="coarse_id",
+    ).select("coarse_id", F.col(vec_col).alias("_v"), F.xxhash64(id_col).alias("_h"))
 
     def cell_kmeans(pdf):
         import numpy as np
@@ -1168,7 +844,7 @@ def train_ivf_two_level(
         kf = min(k_fine, len(X))
         C = X[:kf].copy()  # hash-order init — deterministic pseudo-random
         for _ in range(iters):
-            a = np.argmax(X @ C.T, axis=1)  # first-max ties, like array_position
+            a = np.argmax(_dots(X[:, None], C[None]), axis=1)  # first max
             for c in range(kf):
                 m = X[a == c]
                 if len(m):
@@ -1182,10 +858,7 @@ def train_ivf_two_level(
 
     fine = (
         assigned.groupBy("coarse_id")
-        .applyInPandas(
-            cell_kmeans,
-            schema="coarse_id int, fines array<array<double>>",
-        )
+        .applyInPandas(cell_kmeans, schema="coarse_id int, fines array<array<double>>")
         .localCheckpoint(eager=True)
     )
     return TwoLevelIVF(coarse, fine)
@@ -1199,42 +872,53 @@ def assign_two_level(
 ) -> DataFrame:
     """(vec_id, cv, coarse_id, fine_id) — the inverted-file assignment.
 
-    Coarse: one ``_assign_arrow`` kernel pass (bit-identical cells to
-    the JVM expression form at numpy speed). Fine: an
-    equi-join on coarse_id against the k_coarse-row fine frame, then one
-    argmax over the joined cell's array. The fine join carries NO
-    broadcast hint (VERDICT r5 #2): each fine row is k_fine × dim
-    doubles, so the full frame is k_coarse × k_fine × dim — the ENTIRE
-    centroid set (~8 GB at the production heuristic n_cells ≈ √10¹²,
-    dim 1024). The planner broadcasts it while its byte ESTIMATE is
-    small and falls back to a shuffle join on coarse_id once it is not,
-    which ships each fine row only to the tasks holding that cell —
-    per-executor residency O(k_fine × dim × cells-per-task). Cost per
-    vector is (k_coarse + k_fine) · dim — the hierarchical win over the
-    flat quantizer's n_cells · dim — and plan size is independent of
-    k_fine. Rows whose coarse cell got no sample rows (no fine row —
-    possible only when the cell is empty of sample but not of corpus)
-    keep fine_id 0 via the left join's coalesce."""
+    Coarse: one ``_assign_arrow`` pass. Fine: an equi-join on coarse_id
+    against the fine frame, then one Arrow pass taking the argmax over
+    each row's joined fine-centroid matrix. The join carries NO broadcast
+    hint: the fine frame is the ENTIRE centroid set (~8 GB at n_cells ≈
+    √10¹², dim 1024), so the planner broadcasts it only while its size
+    estimate is small and otherwise shuffles on coarse_id — each fine row
+    then reaches only the tasks holding its cell. Cost per vector is
+    (k_coarse + k_fine) · dim. Rows without a fine row (NULL vector, or a
+    coarse cell that got no sample rows) get fine_id 0."""
     c = _assign_arrow(
-        _spread(df.select(id_col, vec_col)),
+        spread_to_parallelism(df.select(id_col, vec_col), min_bytes=0),
         index.coarse,
         id_col,
         vec_col,
         out_col="coarse_id",
-    ).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        "coarse_id",
+    ).select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"), "coarse_id")
+    j = c.join(index.fine, "coarse_id", "left").select(
+        "vec_id", "cv", "coarse_id", "fines"
     )
-    j = c.join(index.fine, "coarse_id", "left")
-    return j.select(
-        "vec_id",
-        "cv",
-        "coarse_id",
-        F.coalesce(
-            _cluster_from_dots(_dots_from_matrix("cv", "fines")), F.lit(0)
-        ).alias("fine_id"),
+    out_schema = StructType(
+        j.schema.fields[:3] + [StructField("fine_id", IntegerType(), False)]
     )
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for tbl in batches:
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            X, _, _ = _as_matrix(tbl.column("cv"), who="assign_two_level")
+            fines = tbl.column("fines")
+            has = ~fines.is_null().to_numpy(zero_copy_only=False)
+            cells = tbl.column("coarse_id").to_numpy(zero_copy_only=False)
+            fine_id = np.zeros(n, dtype=np.int32)
+            # every row of one coarse cell joined the same fine row
+            for c in np.unique(cells[has]):
+                ix = np.nonzero(has & (cells == c))[0]
+                Fm, _, _ = _as_matrix(fines[int(ix[0])].values, who="assign_two_level")
+                fine_id[ix] = np.argmax(_dots(X[ix][:, None], Fm[None]), axis=1)
+            yield pa.record_batch(
+                [tbl.column(i) for i in range(3)] + [pa.array(fine_id)],
+                names=["vec_id", "cv", "coarse_id", "fine_id"],
+            )
+
+    return j.mapInArrow(kernel, schema=out_schema)
 
 
 def ivf_topk_two_level(
@@ -1253,65 +937,21 @@ def ivf_topk_two_level(
 ) -> DataFrame:
     """Top-k ANN over the two-level inverted file.
 
-    Each query ranks coarse cells on the broadcast matrix, keeps
-    ``n_probe_coarse``, joins those cells' fine rows, ranks the
-    n_probe_coarse × k_fine candidate fine cells by fine-centroid dot,
-    keeps ``n_probe_fine`` (coarse_id, fine_id) pairs, and exact-cosine
-    re-ranks only the corpus rows in those cells. Identical vectors
-    assign and probe identically, so exact-duplicate queries have
-    recall 1 by construction (the deterministic-oracle hook, as with
-    ``ivf_topk``). Scan fraction ~ n_probe_fine / (k_coarse · k_fine)."""
+    Each query ranks coarse cells, keeps ``n_probe_coarse``, ranks those
+    cells' fine centroids, keeps ``n_probe_fine`` (coarse_id, fine_id)
+    pairs, and exact-cosine re-ranks only the corpus rows in those cells
+    (``_two_level_probes``). Identical vectors assign and probe
+    identically, so exact-duplicate queries have recall 1 by
+    construction (the deterministic-oracle hook, as with ``ivf_topk``).
+    Scan fraction ~ n_probe_fine / (k_coarse · k_fine)."""
     idx = index if index is not None else train_ivf_two_level(
         corpus, k_coarse, k_fine, id_col, vec_col, iters, sample_cap
     )
-    # corpus norms once per row at assignment time; query norms once
-    # before the probe windows (cos = dot/(qn*cn), values unchanged)
-    inv = assign_two_level(corpus, idx, id_col, vec_col).withColumn(
-        "_cn", _norm(F.col("cv"))
+    probes = _two_level_probes(
+        _query_side(queries, id_col, vec_col), idx, n_probe_coarse, n_probe_fine
     )
-
-    qc = _with_dots(queries, idx.coarse, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.posexplode("_dots").alias("coarse_id", "_cdot"),
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_cdot").desc(), F.col("coarse_id").asc()
-    )
-    qprobe = (
-        qc.withColumn("_cr", F.row_number().over(wc))
-        .filter(F.col("_cr") <= n_probe_coarse)
-        .drop("_cr", "_cdot")
-    )
-    qfine = qprobe.join(F.broadcast(idx.fine), "coarse_id").select(
-        "query_id",
-        "qv",
-        "_qn",
-        "coarse_id",
-        F.posexplode(_dots_from_matrix("qv", "fines")).alias("fine_id", "_fdot"),
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("_fdot").desc(), F.col("coarse_id").asc(), F.col("fine_id").asc()
-    )
-    probe_rows = (
-        qfine.withColumn("_fr", F.row_number().over(wf))
-        .filter(F.col("_fr") <= n_probe_fine)
-        .select("query_id", "qv", "_qn", "coarse_id", "fine_id")
-        .collect()  # |Q| x n_probe_fine rows — the broadcast query side
-    )
-
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["coarse_id", "fine_id"]
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    inv = assign_two_level(corpus, idx, id_col, vec_col)
+    return _topk(_probe_rerank_arrow(inv, probes, ["coarse_id", "fine_id"]), k)
 
 
 def write_ivf_index_two_level(
@@ -1324,11 +964,8 @@ def write_ivf_index_two_level(
     """Materialize the two-level inverted file PARTITIONED BY
     (coarse_id, fine_id) — ``.../coarse_id=<i>/fine_id=<j>/``. Probing
     n_probe_fine of k_coarse × k_fine cells then reads only those
-    directories (manifest-level pruning on Iceberg). Assignment is the
-    broadcast-coarse + fine-join projection computed pre-shuffle at full
-    width; the repartition on the partition keys clusters each cell into
-    one writer so the layout is one file per cell, not writers × cells
-    small files (guide §6)."""
+    directories. As in ``write_ivf_index``, the repartition on the
+    partition keys writes one file per cell."""
     assign_two_level(corpus, index, id_col, vec_col).repartition(
         "coarse_id", "fine_id"
     ).write.partitionBy("coarse_id", "fine_id").mode("overwrite").parquet(
@@ -1348,65 +985,15 @@ def ivf_topk_two_level_indexed(
     n_probe_fine: int = 4,
 ) -> DataFrame:
     """Top-k over the persisted two-level inverted file with STATIC
-    partition pruning on BOTH levels.
-
-    The probed (coarse_id, fine_id) pairs across all queries number at
-    most min(|Q| × n_probe_fine, k_coarse × k_fine) — tiny — so they are
-    collected and pushed as an exact disjunction of per-pair conjunctions:
-    the scan's PartitionFilters skip every unprobed directory at
-    file-listing time. Mirrors ``ivf_topk_indexed``'s design with the
-    flat quantizer replaced by the residency-bounded two-level one."""
-    qc = _with_dots(queries, index.coarse, vec_col, "_dots").select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-        F.posexplode("_dots").alias("coarse_id", "_cdot"),
+    partition pruning on BOTH levels: the probed (coarse_id, fine_id)
+    pairs — at most min(|Q| × n_probe_fine, k_coarse × k_fine) — are
+    pushed as a disjunction of per-pair conjunctions, so the scan's
+    PartitionFilters skip every unprobed directory (as ``ivf_topk_indexed``)."""
+    probes = _two_level_probes(
+        _query_side(queries, id_col, vec_col), index, n_probe_coarse, n_probe_fine
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_cdot").desc(), F.col("coarse_id").asc()
-    )
-    qprobe = (
-        qc.withColumn("_cr", F.row_number().over(wc))
-        .filter(F.col("_cr") <= n_probe_coarse)
-        .drop("_cr", "_cdot")
-    )
-    qfine = qprobe.join(F.broadcast(index.fine), "coarse_id").select(
-        "query_id",
-        "qv",
-        "_qn",
-        "coarse_id",
-        F.posexplode(_dots_from_matrix("qv", "fines")).alias("fine_id", "_fdot"),
-    )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("_fdot").desc(), F.col("coarse_id").asc(), F.col("fine_id").asc()
-    )
-    # one collect replaces the r5 eager checkpoint + pairs collect: the
-    # probe set feeds both the static two-level partition filter and the
-    # re-rank kernel's closure
-    probe_rows = (
-        qfine.withColumn("_fr", F.row_number().over(wf))
-        .filter(F.col("_fr") <= n_probe_fine)
-        .select("query_id", "qv", "_qn", "coarse_id", "fine_id")
-        .collect()
-    )
-    pairs = {(r["coarse_id"], r["fine_id"]) for r in probe_rows}
-    pred = None
-    for ci, fi in sorted(pairs):
-        p = (F.col("coarse_id") == ci) & (F.col("fine_id") == fi)
-        pred = p if pred is None else (pred | p)
-    inv = _spread(
-        spark.read.parquet(index_path).filter(
-            pred if pred is not None else F.lit(False)
-        )
-    ).withColumn("_cn", _norm(F.col("cv")))
-    scored = _probe_rerank_arrow(
-        inv, probe_rows, ["coarse_id", "fine_id"]
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    pred = F.lit(False)
+    for ci, fi in sorted(probes):
+        pred = pred | ((F.col("coarse_id") == ci) & (F.col("fine_id") == fi))
+    inv = spread_to_parallelism(spark.read.parquet(index_path).filter(pred), min_bytes=0)
+    return _topk(_probe_rerank_arrow(inv, probes, ["coarse_id", "fine_id"]), k)

@@ -1,11 +1,15 @@
 #!/usr/bin/env python
-"""Replay every __spark_entry__ queries() entry against its DuckDB oracle
+"""Replay __spark_entry__ queries() entries against their DuckDB oracles
 — the same comparison the driver's correctness gate runs. Usage:
 
-    python scripts/replay_oracles.py [sf_dir]   # default /root/testdata/sf0.01
+    python scripts/replay_oracles.py [sf_dir] [query ...]
 
-Prints MATCH / MISMATCH / ROWS-ONLY per query and exits non-zero on any
-mismatch.
+``sf_dir`` defaults to the sf0.01 test-data directory. With no query
+names every entry is replayed; otherwise only the named ones, in the
+order given (a name may repeat, so ``sim_topk sim_topk sim_topk`` is one
+cold and two warm runs). Prints MATCH / MISMATCH / ROWS-ONLY and the query's wall
+time (Spark collect only, the oracle excluded) per run, and exits
+non-zero on any mismatch or unknown query name.
 """
 
 from __future__ import annotations
@@ -13,6 +17,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -44,6 +49,13 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
+    queries = entrymod.queries()
+    names = sys.argv[2:] or sorted(queries)
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        print("unknown queries:", unknown)
+        return 2
+
     spark = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", "local[8]"))
         .config("spark.sql.shuffle.partitions", "8")
@@ -60,13 +72,15 @@ def main() -> int:
 
     mismatches = []
     oracles = entrymod.oracle_sql()
-    for name, fn in sorted(entrymod.queries().items()):
-        sdf = fn(spark, sf_dir)
+    for name in names:
+        t0 = time.perf_counter()
+        sdf = queries[name](spark, sf_dir)
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
+        wall = time.perf_counter() - t0
         oracle = oracles.get(name)
         if oracle is None:
-            print(f"{name}: ROWS-ONLY ({len(srows)} rows)")
+            print(f"{name}: ROWS-ONLY ({len(srows)} rows) {wall:.3f}s")
             continue
         res = con.execute(oracle)
         dcols = [d[0] for d in res.description]
@@ -76,7 +90,8 @@ def main() -> int:
             and len(srows) == len(drows)
             and normalize(srows, scols) == normalize(drows, dcols)
         )
-        print(f"{name}: {'MATCH' if ok else 'MISMATCH'} ({len(srows)} rows)")
+        verdict = "MATCH" if ok else "MISMATCH"
+        print(f"{name}: {verdict} ({len(srows)} rows) {wall:.3f}s", flush=True)
         if not ok:
             mismatches.append(name)
     spark.stop()

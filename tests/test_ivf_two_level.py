@@ -168,3 +168,38 @@ def test_two_level_indexed_parity_and_pruning(spark, corpus, tmp_path):
     m = re.search(r"PartitionFilters: \[[^\]]*coarse_id[^\]]*\]", plan)
     assert m, plan
     assert "fine_id" in m.group(0), m.group(0)
+
+
+def test_query_side_collects_only_probed_fine_rows(spark, corpus, monkeypatch):
+    """The two-level query side collects the fine rows of the probed
+    coarse cells only — its plan filters coarse_id to exactly those ids
+    — instead of broadcasting the whole fine frame."""
+    import re
+
+    import numpy as np
+
+    from neontology_spark import similarity as S
+
+    idx = S.train_ivf_two_level(corpus, k_coarse=4, k_fine=2, iters=1)
+    seen = []
+    fine_rows = S._fine_rows
+
+    def spy(fine, coarse_ids):
+        df = fine_rows(fine, coarse_ids)
+        seen.append((list(coarse_ids), df))
+        return df
+
+    monkeypatch.setattr(S, "_fine_rows", spy)
+    # queries near two of the four cluster axes, one coarse probe each
+    queries = corpus.filter(F.col("vec_id").isin(0, 4, 8, 1, 5, 9))
+    qs = S._query_side(queries, "vec_id", "embedding")
+    probes = S._two_level_probes(qs, idx, 1, 2)
+
+    C = np.asarray(idx.coarse)
+    want = sorted({int(S._ranked(d)[0]) for d in S._dots(qs[1][:, None], C[None])})
+    assert len(seen) == 1 and seen[0][0] == want and len(want) < 4
+    plan = seen[0][1]._jdf.queryExecution().optimizedPlan().toString()
+    m = re.search(r"coarse_id#\d+ (?:IN \(([^)]*)\)|= (\d+))", plan)
+    assert m, plan
+    assert sorted(int(x) for x in (m.group(1) or m.group(2)).split(",")) == want
+    assert {c for c, _ in probes} <= set(want)
