@@ -74,6 +74,19 @@ def co_located_unmatched(
     )
 
 
+def estimated_bytes(df: DataFrame) -> Optional[int]:
+    """The optimizer's size estimate of ``df`` in bytes — a driver-side,
+    constant-time probe of the logical-plan stats, no job. A file scan
+    is sized by its on-disk (compressed) bytes, scaled down to the
+    projected columns. None when the stats are unknown or the
+    "unknown size" sentinel."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+    return est if est < (1 << 60) else None
+
+
 def spread_to_parallelism(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     """Round-robin repartition up to the session's default parallelism
     when the incoming plan yields fewer partitions.
@@ -99,13 +112,8 @@ def spread_to_parallelism(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     stats are unavailable/unknown."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = None
-    if est is not None and est < (1 << 60):  # known, non-sentinel stats
+    est = estimated_bytes(df)
+    if est is not None:
         if min_bytes <= est < _SPREAD_CAP_BYTES:
             return df.repartition(n)
         return df

@@ -14,6 +14,10 @@ Design:
   HISTOGRAMS, joined baseline↔current per bucket — the raw table is
   scanned once per run to build histograms; the comparison is over
   #buckets × #partitions rows (tiny, broadcast-joined).
+* quantile drift — baseline and current stacked into one frame grouped by
+  (side, part), so ONE grouped-quantile run (``checks.stats``) serves both
+  sides; current rows then join the broadcast baseline rows on
+  (column, prob).
 
 Scale notes: one scan builds every histogram for a run (stack the bucket
 exprs, explode — same trick as the stats profiler); the KS/PSI join is
@@ -199,90 +203,44 @@ def quantile_drift(
     shifts see location/scale changes at exactly the ranks that matter
     and need no edge choice. Default ``exact=False``: at 10^12 rows the
     GK sketch is the only viable path, and drift thresholds dwarf its
-    rank error. One aggregate per side, joined on (column, prob) —
-    baseline side is probs × columns rows, broadcast."""
-    from .stats import numeric_quantiles
+    rank error. ``exact=True`` gives ``percentile``-exact quantiles.
 
-    if exact:
-        j = _quantile_drift_exact_fused(baseline, current, columns, probs, part_col)
-        if j is not None:
-            return _shape_quantile_drift(j)
+    Both sides are one frame grouped by (side, part) — the baseline is
+    one group, each current partition another — so one grouped-quantile
+    run (``numeric_quantiles``'s engine, same size gate) serves both,
+    and the current rows join the baseline rows (probs × columns,
+    broadcast) on (column, prob). A row exists only where both sides
+    have a quantile: a column that is empty or all-NULL in the baseline,
+    or in a current partition, yields no rows there."""
+    from .stats import _grouped_quantiles, _value_cols
 
-    base = numeric_quantiles(
-        baseline, columns, probs, None, exact, accuracy
-    ).select(
-        "column", "prob", F.col("quantile").alias("q_base")
-    )
-    cur = numeric_quantiles(
-        current, columns, probs, part_col, exact, accuracy
-    ).select("part", "column", "prob", F.col("quantile").alias("q_cur"))
-    j = cur.join(F.broadcast(base), ["column", "prob"])
-    return _shape_quantile_drift(j)
-
-
-def _quantile_drift_exact_fused(
-    baseline: DataFrame,
-    current: DataFrame,
-    columns: Sequence[str],
-    probs: Sequence[float],
-    part_col: Optional[str],
-) -> Optional[DataFrame]:
-    """Both probe sets in ONE rank-select run: the baseline rides as an
-    extra (side, part) group of the same three scans, so exact drift
-    costs one pass-set instead of two (half the scans, half the driver
-    actions — measured r6). Results are identical to the two-call form
-    by construction: each group's count/grid/selection is derived per
-    group exactly as the separate calls derive theirs. Returns None for
-    the generic fallback path (NaN/±inf values or too many groups)."""
-    from .stats import _rank_select_core, _rank_select_worthwhile
-
-    spark = baseline.sparkSession
     cols = [c for c in columns if c != part_col]
-    plist = [float(p) for p in probs]
-    # size-gated like numeric_quantiles: below the threshold the one-pass
-    # `percentile` aggregate (generic path) beats three fused scans
-    if not _rank_select_worthwhile(current, len(cols)):
-        return None
-
-    def vcols(df):
-        return [F.col(c).cast("double").alias(f"__v_{c}") for c in cols]
-
-    b = baseline.select(
-        F.lit(0).cast("long").alias("__side"),
-        F.lit(None).cast("long").alias("__part"),
-        *vcols(baseline),
-    )
     cur_part = (
         F.col(part_col).cast("long") if part_col is not None
         else F.lit(None).cast("long")
-    ).alias("__part")
-    c = current.select(
-        F.lit(1).cast("long").alias("__side"), cur_part, *vcols(current)
     )
-    res = _rank_select_core(
-        b.unionByName(c), cols, plist, ["__side", "__part"]
+    sides = baseline.select(
+        F.lit(0).cast("long").alias("__side"),
+        F.lit(None).cast("long").alias("__part"),
+        *_value_cols(cols),
+    ).unionByName(
+        current.select(
+            F.lit(1).cast("long").alias("__side"),
+            cur_part.alias("__part"),
+            *_value_cols(cols),
+        )
     )
-    if res is None:
-        return None
-    q_base = {
-        (col, p): q for ((side, _), col, p, q) in res if side == 0
-    }
-    rows = [
-        (part, col, p, q_base.get((col, p)), q)
-        for ((side, part), col, p, q) in res
-        if side == 1
-    ]
-    return spark.createDataFrame(
-        [
-            (p_, c_, float(pr), None if qb is None else float(qb),
-             None if qc is None else float(qc))
-            for (p_, c_, pr, qb, qc) in rows
-        ],
-        schema="part long, column string, prob double, q_base double, q_cur double",
+    q = _grouped_quantiles(sides, ["__side", "__part"], cols, probs, exact, accuracy)
+    base = q.filter(F.col("__side") == 0).select(
+        "column", "prob", F.col("quantile").alias("q_base")
     )
-
-
-def _shape_quantile_drift(j: DataFrame) -> DataFrame:
+    cur = q.filter(F.col("__side") == 1).select(
+        F.col("__part").alias("part"),
+        "column",
+        "prob",
+        F.col("quantile").alias("q_cur"),
+    )
+    j = cur.join(F.broadcast(base), ["column", "prob"])
     denom = F.when(F.abs(F.col("q_base")) > 1e-12, F.abs(F.col("q_base")))
     return j.select(
         "part",

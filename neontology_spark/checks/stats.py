@@ -22,11 +22,14 @@ Scale design:
 
 from __future__ import annotations
 
+import json
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..bucketing import estimated_bytes
 
 # long stats row schema: one row per (part, column)
 STATS_COLS = [
@@ -198,73 +201,34 @@ def numeric_quantiles(
     """Long-format quantiles: (part, column, prob, quantile) — the
     distribution companion to ``column_stats``'s min/max (quantile
     drift between partitions/snapshots catches shifts a min/max never
-    shows).
+    shows). A (part, column) with no non-NULL value yields no rows.
 
     ``exact=True`` computes exact linear-interpolated quantiles —
     bit-identical to Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` (oracle-checked) — via a three-scan rank-select
-    (``_exact_quantiles_rank_select``): per-group count/min/max, a
-    fixed-width bucket histogram (map-side-combinable counts, no value
-    buffering), then exact selection inside only the buckets that
-    contain a probed rank. Unlike the ``percentile`` aggregate it never
-    materializes a per-group value→count map (which at sf1.0 meant
-    ~4.6M-entry maps serialized through the shuffle — 10.5 s for one
-    query, measured r6) and never sorts the data. Inputs the fast path
-    cannot serve exactly (NaN/±inf values, very many groups) fall back
-    to the ``percentile`` aggregate — same results, old cost.
-    ``exact=False`` is the 10^12-row path: ``approx_percentile``
-    (GK sketch, ``accuracy`` controls the rank error bound ~1/accuracy,
+    ``quantile_cont`` (oracle-checked). An input the optimizer sizes
+    below 2 × ``_RANK_SELECT_MIN_VALUES`` bytes goes straight to one
+    ``percentile`` aggregate; otherwise one per-group count/min/max scan
+    sizes it: from ``_RANK_SELECT_MIN_VALUES`` non-NULL values up, a
+    rank-select finishes the job in two more scans without buffering or
+    sorting values; below it (or with NaN/±inf values, or more than
+    ``_QUANTILE_MAX_SERIES`` (part, column) pairs) ``percentile`` does —
+    same rows on either side.
+    ``exact=False`` is the 10^12-row path: ``approx_percentile`` (GK
+    sketch, ``accuracy`` controls the rank error bound ~1/accuracy,
     memory O(accuracy·log n)) — one map-side-combinable aggregate at
     any size. Same output shape either way; accuracy-vs-exact deviation
-    is pytest-bounded."""
-    plist = [float(p) for p in probs]
+    is pytest-bounded. Both modes run ``_grouped_quantiles``."""
     cols = [c for c in columns if c != part_col]
-    if exact and _rank_select_worthwhile(df, len(cols)):
-        out = _exact_quantiles_rank_select(df, cols, plist, part_col)
-        if out is not None:
-            return out
-    arr = "array(" + ", ".join(repr(p) for p in plist) + ")"
-    fn = "percentile" if exact else "approx_percentile"
-    extra = "" if exact else f", {accuracy}"
-    aggs = [
-        # backtick-quoted so column names needing escaping parse
-        # (ADVICE r5)
-        F.expr(f"{fn}(`{c}`, {arr}{extra})").alias(f"__q_{c}")
-        for c in cols
-    ]
-    if part_col is None:
-        wide = df.groupBy(F.lit(None).cast("long").alias("part")).agg(*aggs)
-    else:
-        wide = df.groupBy(F.col(part_col).cast("long").alias("part")).agg(*aggs)
-    per_col = F.array(
-        *[
-            F.struct(F.lit(c).alias("column"), F.col(f"__q_{c}").alias("qs"))
-            for c in cols
-        ]
-    )
-    probs_arr = F.array(*[F.lit(p) for p in plist])
-    return (
-        wide.select("part", F.explode(per_col).alias("s"))
-        .select(
-            "part",
-            F.col("s.column").alias("column"),
-            F.explode(
-                F.arrays_zip(
-                    probs_arr.alias("prob"), F.col("s.qs").alias("q")
-                )
-            ).alias("pq"),
-        )
-        .select(
-            "part",
-            "column",
-            F.col("pq.prob").alias("prob"),
-            F.col("pq.q").cast("double").alias("quantile"),
-        )
-    )
+    part = (
+        F.col(part_col).cast("long") if part_col is not None
+        else F.lit(None).cast("long")
+    ).alias("part")
+    frame = df.select(part, *_value_cols(cols))
+    return _grouped_quantiles(frame, ["part"], cols, probs, exact, accuracy)
 
 
 # ---------------------------------------------------------------------------
-# exact quantiles by rank-select — no value buffering, no sort
+# grouped quantiles — one engine, two exact algorithms picked by size
 # ---------------------------------------------------------------------------
 #
 # Spark's `percentile` is a TypedImperativeAggregate: every task builds a
@@ -274,126 +238,182 @@ def numeric_quantiles(
 # rank-select below computes the same interpolated quantiles with three
 # cheap scans whose aggregates are all map-side combinable:
 #
-#   1. per (part, column): count / min / max (+ a NaN/±inf probe);
-#   2. a fixed-width bucket histogram per (part, column) — counts only;
-#      a window cumulative + a broadcast join against the probed ranks
-#      locates the bucket holding each target rank and its rank offset;
+#   1. per (group, column) series: count / min / max (+ a NaN/±inf
+#      probe) — also what the size gate reads;
+#   2. a fixed-width bucket histogram per series — counts only, collected;
+#      the bucket holding each probed rank and its rank offset are
+#      located driver-side;
 #   3. a filtered scan of ONLY those buckets' rows, aggregated to
-#      (value, count) — a few hundred rows — selected and interpolated
-#      driver-side with `percentile`'s exact formula
+#      (value, count), selected and interpolated driver-side with
+#      `percentile`'s exact formula
 #      (lo*(hi-pos) + hi*(pos-lo), pos = p·(n-1)).
 #
-# Shuffle bytes: O(groups × buckets) histogram counts instead of the
-# data; driver residency: O(probed ranks × values-per-bucket).
+# Shuffle bytes: O(series × buckets) histogram counts instead of the
+# data. Driver residency: scan 1 collects at most _QUANTILE_MAX_SERIES //
+# |cols| + 1 group rows; scan 2 at most _QUANTILE_MAX_SERIES ×
+# _QUANTILE_BUCKETS = 262,144 rows; scan 3 collects the distinct values
+# of at most 2·|probs| buckets per series (~n / _QUANTILE_BUCKETS values
+# per bucket on evenly spread data).
 
 _QUANTILE_BUCKETS = 4096
 # rank-select pays three scans; the `percentile` aggregate pays one scan
 # plus a value->count map per group serialized through the shuffle. The
 # map is what explodes on big near-all-distinct columns (sf1.0: 10.5 s
-# vs ~4 s, measured r6), but BELOW this many total values the one-pass
-# aggregate wins (sf0.1: 1.1 s vs 2.6 s, measured r6) — so pick by size
-# (one cheap count; parquet count(*) is metadata-priced).
+# vs ~4 s, measured r6), but BELOW this many non-NULL values the
+# one-pass aggregate wins (sf0.1: 1.1 s vs 2.6 s, measured r6) — so pick
+# by the size scan 1 already counts.
 _RANK_SELECT_MIN_VALUES = 4_000_000
+# rank-select embeds each series' bucket grid in the plan and collects
+# up to series × _QUANTILE_BUCKETS histogram rows, so above this many
+# (group, column) series the `percentile` aggregate serves the request
+# (exact quantiles are the audit path; GK sketches are the scale path).
+_QUANTILE_MAX_SERIES = 64
 
 
-def _rank_select_worthwhile(df: DataFrame, n_cols: int) -> bool:
-    try:
-        return df.count() * max(n_cols, 1) >= _RANK_SELECT_MIN_VALUES
-    except Exception:
-        return True  # unknown size — prefer the scale-safe path
-# exact mode embeds per-group min/max in the plan: cap the group count
-# (exact quantiles are the audit path; GK sketches are the scale path)
-_QUANTILE_MAX_GROUPS = 64
+def _value_cols(cols: Sequence[str]) -> list:
+    """The float64 ``__v_<c>`` projection ``_grouped_quantiles`` reads."""
+    return [F.col(c).cast("double").alias(f"__v_{c}") for c in cols]
 
 
-def _exact_quantiles_rank_select(
-    df: DataFrame,
+def _grouped_quantiles(
+    frame: DataFrame,
+    group_cols: Sequence[str],
     cols: Sequence[str],
-    plist: Sequence[float],
-    part_col: Optional[str],
-):
-    """Exact interpolated quantiles via bucketed rank-select; returns the
-    long-format frame, or None when the input needs the `percentile`
-    fallback (NaN/±inf present, or more than _QUANTILE_MAX_GROUPS
-    groups)."""
-    spark = df.sparkSession
-    if not cols:
-        return _quantile_rows_df(spark, [])
-    part = (
-        F.col(part_col).cast("long") if part_col is not None
-        else F.lit(None).cast("long")
-    ).alias("part")
-    base = df.select(
-        part, *[F.col(c).cast("double").alias(f"__v_{c}") for c in cols]
+    probs: Sequence[float],
+    exact: bool,
+    accuracy: int,
+) -> DataFrame:
+    """Every quantile request's one engine. ``frame`` holds the bigint
+    ``group_cols`` plus the ``_value_cols(cols)`` projection; the result
+    is the long frame (group cols…, column, prob, quantile). A series —
+    one group's column — with no non-NULL value yields no rows.
+
+    ``exact=False`` runs one ``approx_percentile`` aggregate.
+    ``exact=True`` runs rank-select's scan 1, and its counts pick the
+    algorithm: with at least ``_RANK_SELECT_MIN_VALUES`` values, at most
+    ``_QUANTILE_MAX_SERIES`` series and no NaN/±inf value, scans 2-3 run
+    on those stats; otherwise one ``percentile`` aggregate runs. Both
+    give bit-identical rows (pytest-asserted on both gate sides).
+
+    Scan 1 is skipped when the optimizer sizes ``frame`` below two bytes
+    per gate value. A scan is sized by its compressed file bytes: 2.4-6.6
+    per non-NULL value on the lineitem frames at sf0.01-sf1.0, whose
+    columns are one near-distinct and one 50-value column. An input that
+    compresses below two bytes a value is mostly repeated values, so
+    ``percentile``'s value->count map stays small."""
+    plist = [float(p) for p in probs]
+    pc = list(group_cols)
+    est = estimated_bytes(frame) if exact else None
+    if exact and (est is None or est >= 2 * _RANK_SELECT_MIN_VALUES):
+        aggs = []
+        for c in cols:
+            v = F.col(f"__v_{c}")
+            aggs += [
+                F.count(v).alias(f"n__{c}"),
+                F.min(v).alias(f"mn__{c}"),
+                F.max(v).alias(f"mx__{c}"),
+                F.coalesce(
+                    F.sum((F.isnan(v) | (F.abs(v) == float("inf"))).cast("long")),
+                    F.lit(0),
+                ).alias(f"bad__{c}"),
+            ]
+        max_groups = _QUANTILE_MAX_SERIES // max(len(cols), 1)
+        stats = frame.groupBy(*pc).agg(*aggs).limit(max_groups + 1).collect()
+        if (
+            len(stats) <= max_groups
+            and sum(r[f"n__{c}"] for r in stats for c in cols)
+            >= _RANK_SELECT_MIN_VALUES
+            and not any(r[f"bad__{c}"] for r in stats for c in cols)
+        ):
+            schema = T.StructType(
+                [T.StructField(k, frame.schema[k].dataType) for k in pc]
+                + [
+                    T.StructField("column", T.StringType()),
+                    T.StructField("prob", T.DoubleType()),
+                    T.StructField("quantile", T.DoubleType()),
+                ]
+            )
+            # one JSON literal rather than createDataFrame: a frame built
+            # from a Python list reads back through an RDD, which cost the
+            # drift join ~0.3 s of extra Spark jobs per call (measured).
+            # Python's float repr round-trips exactly, and scan 1 already
+            # routed NaN/±inf away from this path.
+            rows = json.dumps(
+                [
+                    dict(zip(schema.names, row))
+                    for row in _rank_select(frame, pc, cols, plist, stats)
+                ]
+            )
+            parsed = F.from_json(
+                F.lit(rows), T.ArrayType(schema), {"mode": "FAILFAST"}
+            )
+            return frame.sparkSession.range(1, numPartitions=1).select(F.inline(parsed))
+
+    def agg(c):
+        v = F.col(f"__v_{c}")
+        if exact:
+            return F.percentile(v, plist)
+        return F.percentile_approx(v, plist, accuracy)
+
+    wide = frame.groupBy(*pc).agg(*[agg(c).alias(f"__q_{c}") for c in cols])
+    per_col = F.array(
+        *[
+            F.struct(F.lit(c).alias("column"), F.col(f"__q_{c}").alias("qs"))
+            for c in cols
+        ]
     )
-    results = _rank_select_core(base, cols, plist, ["part"])
-    if results is None:
-        return None
-    return _quantile_rows_df(
-        spark, [(pk[0], c, p, q) for (pk, c, p, q) in results]
+    probs_arr = F.array(*[F.lit(p) for p in plist])
+    # an all-NULL series aggregates to a NULL array: arrays_zip is NULL
+    # and explode drops it — the no-rows contract rank-select matches
+    return (
+        wide.select(*pc, F.explode(per_col).alias("s"))
+        .select(
+            *pc,
+            F.col("s.column").alias("column"),
+            F.explode(
+                F.arrays_zip(probs_arr.alias("prob"), F.col("s.qs").alias("q"))
+            ).alias("pq"),
+        )
+        .select(
+            *pc,
+            "column",
+            F.col("pq.prob").alias("prob"),
+            F.col("pq.q").cast("double").alias("quantile"),
+        )
     )
 
 
-def _rank_select_core(
+def _rank_select(
     base: DataFrame,
+    pc: Sequence[str],
     cols: Sequence[str],
     plist: Sequence[float],
-    part_cols: Sequence[str],
-):
-    """The shared rank-select engine over a pre-projected frame holding
-    ``part_cols`` (the group key — generalized to MULTIPLE columns so
-    callers like ``quantile_drift`` can fuse several probe sets into one
-    run) plus ``__v_<c>`` float64 value columns. Returns a list of
-    (group-key tuple, column, prob, quantile) or None for the
-    ``percentile`` fallback.
+    stats: list,
+) -> list:
+    """Rank-select scans 2-3 over ``_grouped_quantiles``'s frame, given
+    scan 1's per-group ``stats`` rows. Returns (*group key, column,
+    prob, quantile) tuples; series with no value get none.
 
-    r6 shape (vs the first rank-select cut): no localCheckpoint — each
-    of the three passes is a plain column-pruned scan (the checkpoint
-    wrote ~150 MB of blocks per call for no measured win and its
-    eviction churn showed up as cross-query stalls); and the rank→bucket
-    location runs DRIVER-side over the collected histogram (≤ groups ×
-    cols × buckets counts) instead of a window + broadcast join — one
-    less shuffle and two fewer driver actions per call."""
+    The rank→bucket location runs DRIVER-side over the collected
+    histogram instead of a window + broadcast join (one less shuffle and
+    two fewer driver actions per call, measured r6), and no pass is
+    checkpointed: each is a plain column-pruned scan."""
     import math
-
-    spark = base.sparkSession
-    pc = list(part_cols)
 
     def v(c):
         return F.col(f"__v_{c}")
 
-    # ---- scan 1: per-group count/min/max + non-finite probe -------------
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.count(v(c)).alias(f"n__{c}"),
-            F.min(v(c)).alias(f"mn__{c}"),
-            F.max(v(c)).alias(f"mx__{c}"),
-            F.coalesce(
-                F.sum(
-                    (F.isnan(v(c)) | (F.abs(v(c)) == float("inf"))).cast("long")
-                ),
-                F.lit(0),
-            ).alias(f"bad__{c}"),
-        ]
-    stats = base.groupBy(*pc).agg(*aggs).collect()
-    if len(stats) > _QUANTILE_MAX_GROUPS:
-        return None
-    if any(r[f"bad__{c}"] > 0 for r in stats for c in cols):
-        return None
-
-    results: list = []  # (pkey tuple, column, prob, quantile)
+    results: list = []  # (*pkey, column, prob, quantile)
     need: dict = {}  # (pkey tuple, c) -> {n, mn, mx, ranks}
     for r in stats:
         pkey = tuple(r[k] for k in pc)
         for c in cols:
             n = r[f"n__{c}"]
             if n == 0:
-                results += [(pkey, c, p, None) for p in plist]
                 continue
             mn, mx = float(r[f"mn__{c}"]), float(r[f"mx__{c}"])
             if mn == mx:
-                results += [(pkey, c, p, mn) for p in plist]
+                results += [(*pkey, c, p, mn) for p in plist]
                 continue
             ranks = set()
             for p in plist:
@@ -548,12 +568,5 @@ def _rank_select_core(
             else:
                 # Percentile.getPercentile: lower*(higher-pos)+higher*(pos-lower)
                 q = rank_val[lo] * (hi - pos) + rank_val[hi] * (pos - lo)
-            results.append((pkey, c, p, q))
+            results.append((*pkey, c, p, q))
     return results
-
-
-def _quantile_rows_df(spark, rows):
-    return spark.createDataFrame(
-        [(p, c, float(pr), (None if q is None else float(q))) for (p, c, pr, q) in rows],
-        schema="part long, column string, prob double, quantile double",
-    )

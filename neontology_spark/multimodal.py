@@ -378,19 +378,13 @@ def phash_consistency(
         for pdf in it:
             n = len(pdf)
             # NULL stored phash is exactly the dirty input a consistency
-            # checker must FLAG, not crash on (ADVICE r5: the direct
-            # int64 conversion raised on the first NULL and aborted the
-            # job): track the mask, convert through a 0 sentinel, and
-            # surface those rows with NULL stored/hamming — the
-            # violation filter treats them as inconsistent.
-            stored_raw = pdf[phash_col]
-            null_mask = stored_raw.isna().to_numpy()
-            stored = (
-                pd.to_numeric(stored_raw, errors="coerce")
-                .fillna(0)
-                .astype(np.int64)
-                .to_numpy()
-            )
+            # checker must FLAG, not crash on: those rows surface with
+            # NULL stored/hamming, which the violation filter treats as
+            # inconsistent. The hash arrives NULL-free (0 + a separate
+            # mask): a nullable int64 column reaches pandas as float64,
+            # which rounds every |hash| > 2^53 in the batch.
+            null_mask = pdf["__phash_null"].to_numpy(dtype=bool)
+            stored = pdf[phash_col].to_numpy(dtype=np.int64)
             out = {
                 "image_id": pdf[id_col].astype(str),
                 "decode_ok": np.zeros(n, dtype=bool),
@@ -421,9 +415,14 @@ def phash_consistency(
             res.loc[null_mask, "hamming"] = pd.NA
             yield res
 
-    return df.select(id_col, bytes_col, phash_col).mapInPandas(
-        kernel, schema=PHASH_CONSISTENCY_DDL
-    )
+    return df.select(
+        id_col,
+        bytes_col,
+        F.coalesce(F.col(phash_col).cast("long"), F.lit(0).cast("long")).alias(
+            phash_col
+        ),
+        F.col(phash_col).isNull().alias("__phash_null"),
+    ).mapInPandas(kernel, schema=PHASH_CONSISTENCY_DDL)
 
 
 def phash_violations(

@@ -775,7 +775,9 @@ def embedding_near_duplicates(
     pairs = cand.join(va, "id_a").join(vb, "id_b")
     return (
         _score_pairs_arrow(pairs, ["id_a", "id_b"], "va", "vb", "na", "nb")
-        .filter(F.col("cos") >= threshold)
+        # a NULL element scores NaN, and Spark orders NaN above every
+        # number, so it would pass the threshold
+        .filter(~F.isnan("cos") & (F.col("cos") >= threshold))
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )
 

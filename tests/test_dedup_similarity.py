@@ -226,7 +226,9 @@ def test_hyperplane_signature_wrong_dim_fails_fast(spark, vectors):
 
 def test_null_embedding_yields_null_signature_not_error(spark):
     """ADVICE r3: NULL embeddings can never be candidates — they get a
-    NULL signature (skipped by banding) instead of hard-failing the job."""
+    NULL signature (skipped by banding) instead of hard-failing the job.
+    Vectors holding a NULL element share the all-zero signature and
+    score NaN; they are never reported as a pair either."""
     from neontology_spark.similarity import (
         embedding_near_duplicates,
         with_hyperplane_signature,
@@ -236,6 +238,8 @@ def test_null_embedding_yields_null_signature_not_error(spark):
         Row(vec_id=1, embedding=[1.0, 0.0, 0.0, 0.0]),
         Row(vec_id=2, embedding=[1.0, 0.0, 0.0, 0.0]),
         Row(vec_id=3, embedding=None),
+        Row(vec_id=4, embedding=[None, 1.0, 0.0, 0.0]),
+        Row(vec_id=5, embedding=[None, 0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     sigs = {

@@ -232,7 +232,7 @@ def test_quantile_drift_flags_only_shifted_partition(spark, tables):
             assert r["rel_shift"] > 0.3
 
 
-def test_rank_select_path_matches_percentile_bit_exact(spark):
+def test_rank_select_path_matches_percentile_bit_exact(spark, monkeypatch):
     """The size gate routes small inputs to the `percentile` aggregate,
     so the driver-scale rank-select path must be parity-covered by
     FORCING it here: both paths bit-identical on a duplicate-heavy
@@ -249,18 +249,108 @@ def test_rank_select_path_matches_percentile_bit_exact(spark):
     ]
     df = spark.createDataFrame(rows, "g long, dup double, uniq double")
 
-    saved = st._RANK_SELECT_MIN_VALUES
-    try:
-        st._RANK_SELECT_MIN_VALUES = 0  # force rank-select
-        a = numeric_quantiles(
-            df, ["dup", "uniq"], probs=(0.1, 0.5, 0.9, 0.99), part_col="g"
-        ).collect()
-        st._RANK_SELECT_MIN_VALUES = 1 << 60  # force percentile aggregate
-        b = numeric_quantiles(
-            df, ["dup", "uniq"], probs=(0.1, 0.5, 0.9, 0.99), part_col="g"
-        ).collect()
-    finally:
-        st._RANK_SELECT_MIN_VALUES = saved
+    monkeypatch.setattr(st, "_RANK_SELECT_MIN_VALUES", 0)  # force rank-select
+    a = numeric_quantiles(
+        df, ["dup", "uniq"], probs=(0.1, 0.5, 0.9, 0.99), part_col="g"
+    ).collect()
+    # force the percentile aggregate
+    monkeypatch.setattr(st, "_RANK_SELECT_MIN_VALUES", 1 << 60)
+    b = numeric_quantiles(
+        df, ["dup", "uniq"], probs=(0.1, 0.5, 0.9, 0.99), part_col="g"
+    ).collect()
     ka = sorted((r["part"], r["column"], r["prob"], r["quantile"]) for r in a)
     kb = sorted((r["part"], r["column"], r["prob"], r["quantile"]) for r in b)
     assert ka == kb  # bit-exact, not approx
+
+
+@pytest.mark.parametrize(
+    "case", ["all_null_group", "empty_baseline", "null_baseline", "nan_column"]
+)
+def test_quantile_gate_sides_return_identical_rows(spark, monkeypatch, case):
+    """Both sides of the exact-quantile size gate return the same rows on
+    dirty inputs, row contract included: a series with no non-NULL value
+    yields no rows, and a drift row needs a quantile on both sides. A
+    NaN value sends the request to the `percentile` aggregate on both
+    sides."""
+    import neontology_spark.checks.stats as st
+    from neontology_spark.checks.drift import quantile_drift
+    from neontology_spark.checks.stats import numeric_quantiles
+
+    data = spark.createDataFrame(
+        [(i % 3, float(i % 17) * 1.5, float(i)) for i in range(300)],
+        "g long, x double, y double",
+    )
+    probs = (0.1, 0.5, 0.9)
+
+    def drift(baseline, current):
+        return quantile_drift(
+            baseline, current, ["x"], probs, part_col="g", exact=True
+        )
+
+    if case == "all_null_group":
+        df = data.withColumn(
+            "x", F.when(F.col("g") != 2, F.col("x")).cast("double")
+        )
+        query, want_rows = (
+            lambda: numeric_quantiles(df, ["x", "y"], probs, part_col="g"),
+            (3 * 2 - 1) * len(probs),
+        )
+    elif case == "empty_baseline":
+        query, want_rows = lambda: drift(data.filter(F.lit(False)), data), 0
+    elif case == "null_baseline":
+        nulls = data.withColumn("x", F.lit(None).cast("double"))
+        query, want_rows = lambda: drift(nulls, data), 0
+    else:
+        nan = data.withColumn(
+            "x",
+            F.when(F.col("y") % 50 == 7, F.lit(float("nan"))).otherwise(F.col("x")),
+        )
+        query, want_rows = lambda: drift(data, nan), 3 * len(probs)
+
+    rank_selects = []
+    real = st._rank_select
+    monkeypatch.setattr(
+        st, "_rank_select", lambda *a: rank_selects.append(a) or real(*a)
+    )
+
+    def rows(min_values):
+        monkeypatch.setattr(st, "_RANK_SELECT_MIN_VALUES", min_values)
+        return sorted(repr(tuple(r)) for r in query().collect())
+
+    forced_rank_select = rows(0)
+    assert bool(rank_selects) == (case != "nan_column")
+    rank_selects.clear()
+    forced_percentile = rows(1 << 60)
+    assert not rank_selects
+    assert forced_rank_select == forced_percentile
+    assert len(forced_rank_select) == want_rows
+
+
+def test_small_input_skips_the_sizing_scan(spark, monkeypatch):
+    """An input the optimizer sizes below the gate goes straight to the
+    `percentile` aggregate: the same rows as with the sizing scan (the
+    size estimate hidden), in fewer Spark jobs."""
+    import neontology_spark.checks.stats as st
+    from neontology_spark.checks.stats import numeric_quantiles
+
+    # a range has plan stats; a frame built from a Python list has none
+    df = spark.range(300).select(
+        (F.col("id") % 3).alias("g"), (F.col("id") % 17 * 1.5).alias("x")
+    )
+    sc = spark.sparkContext
+
+    def run(group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = numeric_quantiles(df, ["x"], part_col="g").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sorted(tuple(r) for r in rows), len(
+            sc.statusTracker().getJobIdsForGroup(group)
+        )
+
+    skipped, skipped_jobs = run("quantiles_estimate_known")
+    monkeypatch.setattr(st, "estimated_bytes", lambda frame: None)
+    scanned, scanned_jobs = run("quantiles_estimate_unknown")
+    assert skipped == scanned and len(skipped) == 3 * 3
+    assert skipped_jobs < scanned_jobs

@@ -255,9 +255,11 @@ def test_image_near_duplicates(spark):
 
 
 def test_phash_consistency_null_stored_hash_flagged_not_crashed(spark):
-    """ADVICE r5: a NULL stored phash is the dirty input the checker
-    exists for — it must surface as a violation row (NULL stored/hamming)
-    instead of aborting the whole job in the int64 conversion."""
+    """A NULL stored phash is the dirty input the checker exists for — it
+    must surface as a violation row (NULL stored/hamming) instead of
+    aborting the whole job in the int64 conversion. All rows share one
+    partition, so the NULLs sit in the same Arrow batch as hashes above
+    2^53, which must come through exact."""
     import pandas as pd
 
     from neontology_spark.images import _encode, _pixels
@@ -277,7 +279,8 @@ def test_phash_consistency_null_stored_hash_flagged_not_crashed(spark):
     # int column to float64 and silently corrupt the 64-bit hashes
     df = spark.createDataFrame(
         rows, "image_id string, bytes binary, phash long"
-    )
+    ).coalesce(1)
+    assert any(abs(r[2]) > 2**53 for r in rows if r[2] is not None)
 
     rep = {r["image_id"]: r for r in phash_consistency(df).collect()}
     assert len(rep) == 4
@@ -287,6 +290,7 @@ def test_phash_consistency_null_stored_hash_flagged_not_crashed(spark):
         assert rep[f"img_{i}"]["hamming"] is None
         assert rep[f"img_{i}"]["recomputed_phash"] is not None
     for i in (0, 2):  # clean rows unaffected by the NULL neighbors
+        assert rep[f"img_{i}"]["stored_phash"] == rows[i][2]
         assert rep[f"img_{i}"]["hamming"] == 0
 
     vio = {r["image_id"] for r in phash_violations(df, max_hamming=0).collect()}
