@@ -3,13 +3,16 @@
 import pytest
 from pyspark.sql import functions as F
 
+from neontology_spark import components
 from neontology_spark.components import connected_components, dedupe_by_components
 from neontology_spark.sampling import deterministic_sample
 
 
 def test_components_chain_and_singleton_pair(spark):
     """A 3-chain (a-b, b-c) is ONE component labeled by its min id —
-    the case exact-group dedup gets wrong; convergence needs >1 round."""
+    the case exact-group dedup gets wrong. Below the edge cap this is the
+    driver union-find; tests/test_components_gate.py runs the same graph
+    through the distributed loop (where convergence needs >1 round)."""
     pairs = spark.createDataFrame(
         [(1, 5), (5, 9), (20, 21), (30, 31), (31, 32), (32, 33)],
         "id_a long, id_b long",
@@ -23,8 +26,9 @@ def test_components_chain_and_singleton_pair(spark):
 
 
 def test_components_deep_chain_converges(spark):
-    """A 12-node path needs many propagation rounds — the max_iter bound
-    and per-round checkpointing must not truncate convergence."""
+    """A 12-node path given tail-first closes to one component. Below
+    the edge cap this is the driver union-find; the loop's many-round
+    run of the same path is a case in tests/test_components_gate.py."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(11, 0, -1)], "id_a long, id_b long"
     )
@@ -124,12 +128,10 @@ def test_sample_null_keys_never_sampled(spark):
     assert None not in keys and keys <= {"a", "b"}
 
 
-def test_components_long_chain_stress_log_rounds(spark):
-    """VERDICT r3 #7: a 10k-node path graph. Plain hash-min needs
-    O(diameter)=10^4 rounds; with the pointer-doubling shortcut the
-    fixpoint must arrive in <= 18 rounds (~log2 growth per round) —
-    on_truncate='raise' turns a miss into a hard failure, so passing IS
-    the round-count assertion."""
+def _long_chain_components(spark, cap, monkeypatch):
+    """A 10k-node path graph, closed with the size gate set to ``cap``;
+    the (components, nodes, max label) triple of the result."""
+    monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", cap)
     n = 10_000
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
@@ -140,14 +142,30 @@ def test_components_long_chain_stress_log_rounds(spark):
         F.count("*").alias("nodes"),
         F.max("comp").alias("maxc"),
     ).first()
-    assert (agg["ncomp"], agg["nodes"], agg["maxc"]) == (1, n, 0)
+    return agg["ncomp"], agg["nodes"], agg["maxc"]
 
 
-def test_components_truncation_warns_and_raises(spark):
+def test_components_long_chain_stress_log_rounds(spark, monkeypatch):
+    """VERDICT r3 #7: a 10k-node path graph on the distributed loop
+    (the gate is forced shut). Plain hash-min needs O(diameter)=10^4
+    rounds; with the pointer-doubling shortcut the fixpoint must arrive
+    in <= 18 rounds (~log2 growth per round) — on_truncate='raise' turns
+    a miss into a hard failure, so passing IS the round-count assertion."""
+    assert _long_chain_components(spark, -1, monkeypatch) == (1, 10_000, 0)
+
+
+def test_components_long_chain_driver_side(spark, monkeypatch):
+    """The same 10k-node path below the edge cap: driver union-find."""
+    assert _long_chain_components(spark, 1 << 16, monkeypatch) == (1, 10_000, 0)
+
+
+def test_components_truncation_warns_and_raises(spark, monkeypatch):
     """ADVICE r3: exiting via max_iter without the fixpoint must not be
-    silent — the labels may split components."""
+    silent — the labels may split components. Truncation exists only on
+    the distributed loop, so the gate is forced shut."""
     import warnings as W
 
+    monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
@@ -161,9 +179,11 @@ def test_components_truncation_warns_and_raises(spark):
 
 
 def test_star_algorithm_matches_hash_min(spark):
-    """connected_components_star must produce exactly the hash-min labels
-    on a mixed graph: chain + clique + star + singleton pair + isolated
-    dense blob."""
+    """connected_components_star must produce exactly the
+    connected_components labels on a mixed graph: chain + clique + star +
+    singleton pair + isolated dense blob. (Below the cap those come from
+    the driver union-find; the gate-parity cases check them against
+    hash-min on this graph.)"""
     from neontology_spark.components import connected_components_star
 
     edges = (
@@ -185,7 +205,8 @@ def test_star_algorithm_matches_hash_min(spark):
 
 
 def test_star_algorithm_random_graphs(spark):
-    """Randomized cross-check vs hash-min (fixed seeds, 3 graphs)."""
+    """Randomized cross-check vs connected_components (fixed seeds, 3
+    graphs; the gate-parity cases compare both of its sides on them)."""
     import random
 
     from neontology_spark.components import connected_components_star
