@@ -86,10 +86,6 @@ def shape_violations(
     )
 
 
-def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
-
-
 @dataclass
 class CheckResult:
     """One check's output. ``violations`` conforms to VIOLATION_SCHEMA."""

@@ -25,14 +25,6 @@ Scale design — two paths, one size gate (``_LOCAL_MAX_EDGES``):
   |V| groupBy + one |V| shortcut self-join; ``localCheckpoint`` cuts the
   lineage (without it round k re-runs rounds 1..k-1), and one changed-row
   count both materializes the round and tests the fixpoint.
-* ``connected_components_star`` (below) implements the
-  large-star/small-star alternative (Kiveris et al., "Connected
-  Components in MapReduce and Beyond"): it CONTRACTS the edge set per
-  round, so per-round cost shrinks on dense components. At 4 × the cap
-  (262k edges, local[4]) it took 18.2 s against hash-min's 25.8 s on a
-  random graph and tied on a path (36.4 s vs 36.0 s); it has no driver
-  fast path. Cross-checked against ``connected_components`` on
-  mixed/random/chain graphs in tests.
 """
 
 from __future__ import annotations
@@ -91,20 +83,17 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    on_truncate: str = "warn",
 ) -> DataFrame:
     """(node, comp) for every non-NULL id appearing in ``pairs``; ``comp``
     is the min node id in the connected component (stable canonical
     label). The id type is the common type of ``src`` and ``dst``.
 
     At most ``_LOCAL_MAX_EDGES`` edges with integral or string ids: one
-    collect + driver union-find, exact; ``max_iter`` and ``on_truncate``
-    do not apply. Otherwise the distributed hash-min + pointer-doubling
-    loop runs. If ``max_iter`` rounds pass without reaching the fixpoint
-    its labels may SPLIT components (under-merged); ``on_truncate``
-    controls the response: ``"warn"`` (default) emits a RuntimeWarning,
-    ``"raise"`` raises, anything else is silent. With pointer doubling,
-    max_iter=25 covers diameters up to ~2^25."""
+    collect + driver union-find, exact; ``max_iter`` does not apply.
+    Otherwise the distributed hash-min + pointer-doubling loop runs. If
+    ``max_iter`` rounds pass without reaching the fixpoint its labels may
+    SPLIT components (under-merged), and a RuntimeWarning says so. With
+    pointer doubling, max_iter=25 covers diameters up to ~2^25."""
     edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     flip = [F.col("b").alias("a"), F.col("a").alias("b")]
     id_type = edges.unionByName(edges.select(*flip)).schema["a"].dataType
@@ -193,15 +182,12 @@ def connected_components(
         )
     sym.unpersist()
     if not converged:
-        msg = (
+        warnings.warn(
             f"connected_components: fixpoint not reached in {max_iter} "
             "rounds — labels may split components (under-merge). "
-            "Raise max_iter."
+            "Raise max_iter.",
+            RuntimeWarning,
         )
-        if on_truncate == "raise":
-            raise RuntimeError(msg)
-        if on_truncate == "warn":
-            warnings.warn(msg, RuntimeWarning)
     return labels
 
 
@@ -221,120 +207,3 @@ def dedupe_by_components(
         F.col("node").alias(id_col)
     )
     return df.join(drop, id_col, "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# large-star / small-star (Kiveris et al., "Connected Components in
-# MapReduce and Beyond") — the edge-CONTRACTING alternative
-# ---------------------------------------------------------------------------
-
-
-def _canon(e: DataFrame) -> DataFrame:
-    """Canonical undirected edge set: (a < b), self-loops dropped,
-    deduped."""
-    return (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .dropDuplicates()
-    )
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u})."""
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    m = sym.groupBy("a").agg(
-        F.least(F.min("b"), F.first("a")).alias("m")
-    ).select(F.col("a").alias("_u"), "m")
-    out = (
-        sym.filter(F.col("b") > F.col("a"))
-        .join(m, sym["a"] == m["_u"])
-        .select(F.col("m").alias("a"), F.col("b").alias("b"))
-    )
-    return _canon(out)
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """small-star(hi): connect every lo-neighbor (and hi itself) to
-    m = min of hi's lo-neighbors."""
-    m = e.groupBy("b").agg(F.min("a").alias("m")).select(
-        F.col("b").alias("_hi"), "m"
-    )
-    j = e.join(m, e["b"] == m["_hi"])
-    lo_edges = j.select(F.col("m").alias("a"), F.col("a").alias("b"))
-    hi_edges = j.select(F.col("m").alias("a"), F.col("b").alias("b"))
-    return _canon(lo_edges.unionByName(hi_edges))
-
-
-def _edge_checksum(e: DataFrame) -> tuple:
-    # bit_xor (not sum): overflow-free under ANSI mode, and the edge set
-    # is deduped so no pair can cancel itself
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    on_truncate: str = "warn",
-) -> DataFrame:
-    """(node, comp) via alternating large-star/small-star contraction —
-    same output contract as ``connected_components``.
-
-    Why a second algorithm: hash-min + shortcutting keeps the FULL edge
-    set in every round (per-round cost O(|E|) forever). Star rounds
-    CONTRACT the edge set toward a star forest — on dense near-dup
-    clusters |E| collapses toward |V| within a couple of rounds, so the
-    per-round join cost shrinks as the algorithm proceeds; convergence
-    is O(log^2 n) rounds (paper thm. 3). Use it when components are
-    dense/huge (celebrity-duplicate clusters at 10^12 edges);
-    ``connected_components`` remains the default for shallow graphs.
-
-    Each round = one large-star + one small-star (each: a groupBy + a
-    same-key join, Exchange-reused) + a two-number checksum action;
-    ``localCheckpoint`` cuts lineage per round. Fixpoint = the edge set
-    is round-stable (it is then a star forest: every edge (root, child)
-    with root the component min)."""
-    e = _canon(
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    ).localCheckpoint(eager=True)
-    # a NULL id is no node; _canon already drops its edges (least and
-    # greatest skip NULLs, so such an edge becomes a self-loop)
-    all_nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .unionByName(pairs.select(F.col(dst).alias("node")))
-        .filter(F.col("node").isNotNull())
-        .dropDuplicates()
-    )
-    prev = _edge_checksum(e)
-    converged = False
-    for _ in range(max_iter):
-        # lazy checkpoint: the checksum aggregate touches every partition,
-        # so one action materializes the round AND tests the fixpoint
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = _edge_checksum(e)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        msg = (
-            f"connected_components_star: fixpoint not reached in {max_iter} "
-            "rounds — labels may split components. Raise max_iter."
-        )
-        if on_truncate == "raise":
-            raise RuntimeError(msg)
-        if on_truncate == "warn":
-            warnings.warn(msg, RuntimeWarning)
-    # star forest → labels: child b → root a; roots + isolated nodes → self
-    child_root = e.select(F.col("b").alias("node"), F.col("a").alias("comp"))
-    return (
-        all_nodes.join(child_root, "node", "left")
-        .select("node", F.coalesce("comp", "node").alias("comp"))
-    )

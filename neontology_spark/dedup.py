@@ -350,15 +350,6 @@ def _minhash_component(sh_col, seed: int):
     return F.array_min(F.transform(sh_col, lambda s: F.xxhash64(F.lit(seed), s)))
 
 
-def minhash_signature(text_col: str, num_hashes: int = 64, n: int = 3):
-    """Array<long> of length num_hashes: min over shingles of
-    xxhash64(seed_i, shingle). All JVM-side (HOF over the shingle array).
-    Inline form — re-derives the shingle array per component; prefer
-    ``with_minhash_signature`` in plans."""
-    sh = word_shingles(text_col, n)
-    return F.array(*[_minhash_component(sh, i) for i in range(num_hashes)])
-
-
 def with_minhash_signature(
     df: DataFrame,
     text_col: str = "text",

@@ -52,10 +52,6 @@ def check_identifier(name: str, kind: str = "identifier") -> str:
     return name
 
 
-def is_valid_identifier(name: object) -> bool:
-    return isinstance(name, str) and bool(GQL_IDENTIFIER_PATTERN.match(name))
-
-
 def check_int(value: object, kind: str = "value") -> int:
     """Coerce to int the way the reference's int_adapter does (strict-ish):
     bools are ints in Python but are rejected here to avoid silent surprises.

@@ -56,13 +56,6 @@ def stopword_ratio(col: str, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def language_scores(col: str) -> Column:
-    """Struct of per-language stopword-hit ratios."""
-    return F.struct(
-        *[stopword_ratio(col, lang).alias(lang) for lang in sorted(STOPWORDS)]
-    )
-
-
 def detect_language(col: str, min_score: float = 0.05) -> Column:
     """argmax over language scores; 'und' (undetermined) below min_score.
     Expressed as a sorted array of (score, lang) structs — no UDF."""
@@ -315,7 +308,6 @@ def contamination_report(
     id_col: str = "doc_id",
     bench_text_col: str = "text",
     bench_id_col: str = "bench_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per (document, benchmark item) n-gram overlap:
     (doc_id, bench_id, n_shared_ngrams). A row exists only for pairs
@@ -325,13 +317,10 @@ def contamination_report(
     items) explodes to DISTINCT (ngram, bench_id) rows and — being tiny
     next to a 10^12-doc corpus — broadcasts; the corpus side explodes
     its distinct n-grams (array expression, no shuffle) and the join is
-    then map-side. One groupBy(doc, bench) counts shared n-grams. With
-    ``broadcast_benchmark=False`` the same plan shuffles on the n-gram
-    hash instead (both sides exploded) — the fallback when the
-    benchmark outgrows broadcast, still one shuffle. n-grams join on
-    xxhash64, not the string: 8-word grams average ~50 bytes and the
-    shuffle/broadcast carries 8-byte keys (hash collisions at 64 bits
-    are ~N²/2⁶⁵ — negligible at any benchmark size)."""
+    then map-side. One groupBy(doc, bench) counts shared n-grams.
+    n-grams join on xxhash64, not the string: 8-word grams average ~50
+    bytes and the broadcast carries 8-byte keys (hash collisions at 64
+    bits are ~N²/2⁶⁵ — negligible at any benchmark size)."""
     d = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(ngrams(text_col, n)).alias("_g"),
@@ -340,10 +329,8 @@ def contamination_report(
         F.col(bench_id_col).alias("bench_id"),
         F.explode(ngrams(bench_text_col, n)).alias("_g"),
     ).select("bench_id", F.xxhash64("_g").alias("_gh")).dropDuplicates()
-    if broadcast_benchmark:
-        b = F.broadcast(b)
     return (
-        d.join(b, "_gh")
+        d.join(F.broadcast(b), "_gh")
         .groupBy("doc_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("n_shared_ngrams"))
     )

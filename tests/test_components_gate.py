@@ -152,11 +152,3 @@ def test_loop_reads_the_gate_scan(spark, monkeypatch):
     assert not took_local
     assert out.select("comp").distinct().count() == 10
     assert calls.value == 40
-
-
-def test_star_variant_null_contract(spark):
-    """connected_components_star reads edges with the same NULL rule."""
-    pairs = spark.createDataFrame(*CASES["null_ids"])
-    out = components.connected_components_star(pairs)
-    assert out.schema == components.connected_components(pairs).schema
-    assert set(_labels(out)) == NULL_LABELS

@@ -1,5 +1,7 @@
 """Connected-components dedup closure + deterministic sampling tests."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -136,7 +138,9 @@ def _long_chain_components(spark, cap, monkeypatch):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    comp = connected_components(pairs, max_iter=18, on_truncate="raise")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # truncation fails
+        comp = connected_components(pairs, max_iter=18)
     agg = comp.agg(
         F.countDistinct("comp").alias("ncomp"),
         F.count("*").alias("nodes"),
@@ -149,8 +153,8 @@ def test_components_long_chain_stress_log_rounds(spark, monkeypatch):
     """VERDICT r3 #7: a 10k-node path graph on the distributed loop
     (the gate is forced shut). Plain hash-min needs O(diameter)=10^4
     rounds; with the pointer-doubling shortcut the fixpoint must arrive
-    in <= 18 rounds (~log2 growth per round) — on_truncate='raise' turns
-    a miss into a hard failure, so passing IS the round-count assertion."""
+    in <= 18 rounds (~log2 growth per round) — the truncation warning is
+    turned into an error, so passing IS the round-count assertion."""
     assert _long_chain_components(spark, -1, monkeypatch) == (1, 10_000, 0)
 
 
@@ -161,86 +165,17 @@ def test_components_long_chain_driver_side(spark, monkeypatch):
 
 def test_components_truncation_warns_and_raises(spark, monkeypatch):
     """ADVICE r3: exiting via max_iter without the fixpoint must not be
-    silent — the labels may split components. Truncation exists only on
-    the distributed loop, so the gate is forced shut."""
-    import warnings as W
-
+    silent — the labels may split components. The RuntimeWarning becomes
+    an error under the "error" filter, which the round-bound tests rely
+    on. Truncation exists only on the distributed loop, so the gate is
+    forced shut."""
     monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
     with pytest.warns(RuntimeWarning, match="fixpoint not reached"):
         connected_components(pairs, max_iter=1)
-    with pytest.raises(RuntimeError, match="fixpoint not reached"):
-        connected_components(pairs, max_iter=1, on_truncate="raise")
-    with W.catch_warnings():
-        W.simplefilter("error")  # silent mode really is silent
-        connected_components(pairs, max_iter=1, on_truncate="ignore")
-
-
-def test_star_algorithm_matches_hash_min(spark):
-    """connected_components_star must produce exactly the
-    connected_components labels on a mixed graph: chain + clique + star +
-    singleton pair + isolated dense blob. (Below the cap those come from
-    the driver union-find; the gate-parity cases check them against
-    hash-min on this graph.)"""
-    from neontology_spark.components import connected_components_star
-
-    edges = (
-        [(i, i + 1) for i in range(10, 20)]                # chain
-        + [(a, b) for a in range(30, 35) for b in range(a + 1, 35)]  # clique
-        + [(50, x) for x in range(51, 58)]                 # star
-        + [(70, 71)]                                       # pair
-        + [(80, 82), (82, 84), (84, 80), (84, 86)]         # cycle + tail
-    )
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    expected = {
-        (r["node"], r["comp"]) for r in connected_components(pairs).collect()
-    }
-    got = {
-        (r["node"], r["comp"])
-        for r in connected_components_star(pairs).collect()
-    }
-    assert got == expected
-
-
-def test_star_algorithm_random_graphs(spark):
-    """Randomized cross-check vs connected_components (fixed seeds, 3
-    graphs; the gate-parity cases compare both of its sides on them)."""
-    import random
-
-    from neontology_spark.components import connected_components_star
-
-    for seed in (7, 11, 13):
-        rng = random.Random(seed)
-        n = 120
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(150)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        expected = {
-            (r["node"], r["comp"])
-            for r in connected_components(pairs).collect()
-        }
-        got = {
-            (r["node"], r["comp"])
-            for r in connected_components_star(pairs).collect()
-        }
-        assert got == expected, f"seed {seed}"
-
-
-def test_star_algorithm_long_chain(spark):
-    """1k-node path: star contraction also converges in logarithmic
-    rounds (on_truncate='raise' makes the bound an assertion)."""
-    from neontology_spark.components import connected_components_star
-
-    n = 1_000
-    pairs = spark.range(n - 1).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    comp = connected_components_star(pairs, max_iter=15, on_truncate="raise")
-    agg = comp.agg(
-        F.countDistinct("comp").alias("ncomp"), F.count("*").alias("nodes")
-    ).first()
-    assert (agg["ncomp"], agg["nodes"]) == (1, n)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        with pytest.raises(RuntimeWarning, match="fixpoint not reached"):
+            connected_components(pairs, max_iter=1)

@@ -211,10 +211,19 @@ def test_metadata_checks_never_read_bytes(spark, images, model, tmp_path_factory
 
 
 def test_payload_kernels_parity(spark, images):
-    """The zero-copy mapInArrow kernel and the pandas reference kernel
-    must produce identical violation sets."""
-    a = {(r["key"], r["detail"]) for r in check_payload(images, use_arrow=True).collect()}
-    p = {(r["key"], r["detail"]) for r in check_payload(images, use_arrow=False).collect()}
+    """The zero-copy mapInArrow kernel behind check_payload and the pandas
+    reference kernel must produce identical violation sets."""
+    from neontology_spark.images import (
+        PAYLOAD_DDL,
+        _payload_violations,
+        payload_check_batches,
+    )
+
+    a = {(r["key"], r["detail"]) for r in check_payload(images).collect()}
+    scored = images.select("part", "image_id", "bytes", "caption").mapInPandas(
+        payload_check_batches, PAYLOAD_DDL
+    )
+    p = {(r["key"], r["detail"]) for r in _payload_violations(scored).collect()}
     assert a == p and len(a) > 0
 
 
@@ -299,3 +308,37 @@ def test_sampled_kernel_all_null_blobs():
     out0 = _score_record_batch_sampled(empty, sample_rows=8)
     assert out0.num_rows == 0
     assert out0.schema.names == ["part", "image_id", "psnr", "decode_ok", "caption_ok"]
+
+
+def test_sampled_scorer_covering_every_row_equals_full_plane():
+    """With a sample taller than every image the vectorized sampled scorer
+    is the full-plane loop scorer, bit for bit: same PSNR (NaN where the
+    decode fails), decode_ok and caption_ok — on a batch holding the
+    planted corrupt and caption rows, and on a slice of it (non-zero Arrow
+    offsets)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from neontology_spark.images import (
+        _gen_batch,
+        _score_record_batch,
+        _score_record_batch_sampled,
+    )
+
+    pdf = _gen_batch(pd.DataFrame({"id": np.arange(64, dtype=np.int64)}), N_PARTS)
+    batch = pa.RecordBatch.from_pandas(
+        pdf[["part", "image_id", "bytes", "caption"]], preserve_index=False
+    )
+    full = _score_record_batch(batch).to_pydict()
+    assert all(full["psnr"][i] < 40 for i in CORRUPT_ROWS)
+    assert not any(full["caption_ok"][i] for i in CAPTION_MISMATCH_ROWS)
+    for b in (batch, batch.slice(37, 20)):
+        want = _score_record_batch(b)
+        got = _score_record_batch_sampled(b, sample_rows=1 << 20)
+        assert np.array_equal(
+            got.column("psnr").to_numpy(), want.column("psnr").to_numpy(),
+            equal_nan=True,
+        )
+        for c in ("part", "image_id", "decode_ok", "caption_ok"):
+            assert got.column(c).to_pylist() == want.column(c).to_pylist(), c
