@@ -18,7 +18,6 @@ from .referential import (
     UnmatchedError,
     ambiguous_keys,
     check_referential,
-    resolve_endpoints,
     unmatched_rows,
 )
 from .drift import (
@@ -49,7 +48,6 @@ __all__ = [
     "UnmatchedError",
     "ambiguous_keys",
     "check_referential",
-    "resolve_endpoints",
     "unmatched_rows",
     "column_stats",
     "distinct_sketches",

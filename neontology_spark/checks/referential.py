@@ -125,36 +125,3 @@ def check_referential(
             )
     return result
 
-
-def resolve_endpoints(
-    rel_df: DataFrame,
-    source_df: DataFrame,
-    target_df: DataFrame,
-    model: RelationshipModel,
-    source_key: Optional[str] = None,
-    target_key: Optional[str] = None,
-    broadcast_source: bool = False,
-    broadcast_target: bool = False,
-) -> DataFrame:
-    """J1: inner-join endpoint resolution — returns edges with both
-    endpoints resolved; unresolved rows drop silently, exactly the
-    reference MERGE behavior (graphengine.py:281-291). Node-side columns
-    are prefixed ``source_`` / ``target_``.
-    """
-    source_key = source_key or model.source_column
-    target_key = target_key or model.target_column
-
-    src = source_df.select(
-        [F.col(c).alias(f"source_{c}") for c in source_df.columns]
-    )
-    tgt = target_df.select(
-        [F.col(c).alias(f"target_{c}") for c in target_df.columns]
-    )
-    if broadcast_source:
-        src = F.broadcast(src)
-    if broadcast_target:
-        tgt = F.broadcast(tgt)
-    out = rel_df.join(
-        src, rel_df[model.source_column] == src[f"source_{source_key}"], "inner"
-    ).join(tgt, rel_df[model.target_column] == tgt[f"target_{target_key}"], "inner")
-    return out

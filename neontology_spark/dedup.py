@@ -2,8 +2,7 @@
 Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
 
 No reference analogue (neontology's dedup is the exact within-batch
-fingerprint, replayed in upsert.py); these are the web-scale extensions
-the task brief mandates.
+fingerprint, replayed in upsert.py); these are web-scale extensions.
 
 Scale design per operator:
 * exact: md5(normalized) groupBy — map-side combined, one shuffle on the
@@ -32,7 +31,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textops import normalize_text
+from .textops import normalize_text, word_ngrams, word_tokens
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -51,8 +50,8 @@ def exact_duplicate_groups(
     ids of the group, sorted — a bounded example list, not full
     membership. At web scale the biggest normalized-text groups (empty
     strings, boilerplate) have millions of members, and an unbounded
-    ``collect_list`` makes each such group one executor-killing row
-    (VERDICT r3 'What's wrong' #1). The bound is enforced BEFORE the
+    ``collect_list`` makes each such group one executor-killing row.
+    The bound is enforced BEFORE the
     aggregate — a per-group ``row_number`` (same shuffle key as the
     groupBy, so Catalyst reuses the Exchange) feeds a conditional
     ``collect_list`` that only ever holds ``max_ids`` elements; slicing
@@ -126,9 +125,8 @@ def dedupe_exact_incremental(
     fingerprint is already in the persisted ``seen_fps`` store (one
     ``fp_md5`` column) or duplicated within the batch (keep lowest id).
     Returns ``(kept, new_fps, updated)`` — append ``new_fps`` (the
-    delta) to the store for the next run (VERDICT r4 #3: the full
-    ``updated`` union is O(history) to rewrite and exists only as a
-    small-store convenience).
+    delta) to the store for the next run (the full ``updated`` union is
+    O(history) to rewrite, a small-store convenience only).
 
     This is how exact dedup actually runs at 100 TB: the corpus is never
     rescanned; each ingest batch joins against the fingerprint store on
@@ -161,7 +159,7 @@ def dedupe_exact_incremental(
 
 
 # ---------------------------------------------------------------------------
-# paragraph-level dedup (VERDICT r3 #8: the within/cross-document
+# paragraph-level dedup (the within/cross-document
 # duplication doc-level MinHash misses — boilerplate headers/footers,
 # repeated license blocks — the standard LLM-curation stage between
 # exact-doc dedup and near-dup)
@@ -235,7 +233,7 @@ def dedupe_paragraphs(
     dropped) → ONE groupBy(doc) computing totals, kept counts, and the
     rebuilt text in a single aggregate (conditional count/collect over
     the winner flag — a separate totals scan + rejoin would cost two
-    more exchanges, plan-audited round 4). Documents reduced to zero
+    more exchanges). Documents reduced to zero
     paragraphs survive with empty text (kept-row accounting intact)."""
     p = split_paragraphs(df, text_col, id_col)
     w = Window.partitionBy("fp_md5").orderBy(
@@ -267,16 +265,14 @@ def dedupe_paragraphs(
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text_col: str, n: int = 3):
-    """Array of word n-gram strings (distinct), via pure array exprs."""
-    toks = F.array_remove(F.split(normalize_text(text_col), " "), "")
-    k = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(0)))
-    grams = F.when(
-        k >= n,
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")),
-    ).otherwise(F.array(F.array_join(toks, " ")))
-    return F.array_distinct(grams)
+def word_shingles(toks: str, n: int = 3):
+    """Distinct word n-grams of the projected token column ``toks``; fewer
+    than ``n`` tokens → the whole normalized text as one shingle (``['']``
+    when empty); NULL tokens → none, so NULL text never matches."""
+    t = F.col(toks)
+    return F.when(
+        t.isNotNull() & (F.size(t) < n), F.array(F.array_join(t, " "))
+    ).otherwise(F.array_distinct(word_ngrams(toks, n)))
 
 
 def jaccard_pairs(
@@ -296,12 +292,19 @@ def jaccard_pairs(
     """
     from .bucketing import spread_to_parallelism
 
-    base = spread_to_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")),
-        min_bytes=0,  # shingling explodes output well beyond input bytes
-    ).select(
-        "id", word_shingles("_t", n).alias("sh")
-    ).withColumn("sh_size", F.size("sh"))
+    # GC-scoped checkpoint (see minhash_lsh_pairs): the shingles feed three
+    # consumers, and the cut keeps inferred filters (explode's size > 0, the
+    # joins' isnotnull) from re-inlining the tokenizer into the gram lambda
+    base = (
+        spread_to_parallelism(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")),
+            min_bytes=0,  # shingling explodes output well beyond input bytes
+        )
+        .select("id", word_tokens("_t").alias("_toks"))
+        .select("id", word_shingles("_toks", n).alias("sh"))
+        .withColumn("sh_size", F.size("sh"))
+        .localCheckpoint(eager=False)
+    )
     sizes = base.select("id", "sh_size")
     inv = base.select("id", F.explode("sh").alias("shingle"))
     if max_shingle_df is not None:
@@ -340,13 +343,10 @@ def jaccard_pairs(
 
 
 def _minhash_component(sh_col, seed: int):
-    """min over shingles of xxhash64(seed, shingle). The lambda MUST be
-    single-parameter: PySpark passes (element, index) to two-parameter HOF
-    lambdas, so the round-1 form ``lambda s, i=i`` silently received the
-    array INDEX as the seed — every component was the same expression and
-    wildly-different docs got identical signatures (found via the planted
-    oracle in round 2). The factory closure keeps the seed a true constant.
-    """
+    """min over shingles of xxhash64(seed, shingle). The lambda must stay
+    single-parameter: PySpark passes (element, index) to a two-parameter
+    lambda, so ``lambda s, i=i`` would receive the array index as the
+    seed. The factory closure keeps the seed a true constant."""
     return F.array_min(F.transform(sh_col, lambda s: F.xxhash64(F.lit(seed), s)))
 
 
@@ -357,13 +357,14 @@ def with_minhash_signature(
     num_hashes: int = 64,
     n: int = 3,
 ) -> DataFrame:
-    """df + minhash signature column, with the shingle array materialized
-    once as a per-row attribute (CollapseProject will not inline a
-    non-cheap expression referenced ``num_hashes`` times) — one
-    tokenize/normalize pass instead of ``num_hashes``."""
-    d = df.withColumn("_sh", word_shingles(text_col, n))
+    """df + minhash signature column. Tokens and shingles are each
+    projected once as a per-row attribute (CollapseProject does not
+    inline a non-cheap expression referenced more than once). NULL text
+    has no shingles, so every signature slot is NULL."""
+    d = df.withColumn("_toks", word_tokens(text_col))
+    d = d.withColumn("_sh", word_shingles("_toks", n))
     sig = F.array(*[_minhash_component(F.col("_sh"), i) for i in range(num_hashes)])
-    return d.withColumn(out_col, sig).drop("_sh")
+    return d.withColumn(out_col, sig).drop("_toks", "_sh")
 
 
 def minhash_lsh_pairs(
@@ -402,11 +403,12 @@ def minhash_lsh_pairs(
     # compute once, reuse for banding and verification. localCheckpoint
     # (not persist): its blocks live only as long as the returned
     # frame's RDD references — the ContextCleaner reclaims them on GC,
-    # so repeated calls don't accumulate CacheManager entries that
-    # nothing ever unpersists (ADVICE r4 / VERDICT r4 #5).
+    # so repeated calls don't accumulate CacheManager entries.
     sig = sig.localCheckpoint(eager=False)
 
-    band_rows = sig.select(
+    # an all-NULL signature (no shingles: NULL text) is no evidence of
+    # similarity and would put every such doc in one hot bucket per band
+    band_rows = sig.filter(F.col("sig")[0].isNotNull()).select(
         "id",
         F.explode(
             F.array(
@@ -464,13 +466,12 @@ SIMHASH_BITS = 64
 
 def _simhash_votes(text_col: str):
     """Array<long> of length SIMHASH_BITS: slots 0..62 = per-bit one-vote
-    counts over the distinct token hashes, slot 63 = token count. ONE pass:
-    tokenize + hash once, then a single ``aggregate`` accumulates all 63
-    bit votes (+count) per token. The round-1 form built 63 separate
-    ``size(filter(...))`` aggregates, each re-deriving the tokenize+hash
-    subexpression — Catalyst does not CSE across HOF lambdas, so per-row
-    cost was ~63× a full tokenization (VERDICT r1 'What's wrong' #4)."""
-    toks = F.array_distinct(F.array_remove(F.split(normalize_text(text_col), " "), ""))
+    counts over the distinct token hashes, slot 63 = token count. One
+    pass: tokenize and hash once, then a single ``aggregate`` accumulates
+    all 63 bit votes (+count) per token — Catalyst does not share
+    subexpressions across lambdas, so 63 per-bit aggregates would each
+    re-tokenize the row."""
+    toks = F.array_distinct(word_tokens(text_col))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     zero = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
     return F.aggregate(
@@ -487,16 +488,17 @@ def _simhash_votes(text_col: str):
 
 
 def _simhash_from_votes(votes):
-    """Majority vote per bit (ones*2 >= n, matching the r1 tie rule) →
-    64-bit long. ``votes`` should be a materialized column reference, not
-    an inline expression — it is referenced 64 times here."""
+    """Majority vote per bit (ones*2 >= n: ties set the bit) → 64-bit
+    long, NULL for NULL votes (NULL text), which no chunk join matches.
+    ``votes`` should be a materialized column reference, not an inline
+    expression — it is referenced 64 times here."""
     n = votes[SIMHASH_BITS - 1]
     expr = F.lit(0).cast("long")
     for b in range(SIMHASH_BITS - 1):  # bit 63 excluded: keep sign positive
         expr = expr + F.when(
             votes[b] * 2 >= n, F.lit(1 << b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
-    return expr
+    return F.when(n.isNotNull(), expr)
 
 
 def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "sh") -> DataFrame:
@@ -508,13 +510,6 @@ def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "sh") -> 
         .withColumn(out_col, _simhash_from_votes(F.col("_votes")))
         .drop("_votes")
     )
-
-
-def simhash(text_col: str):
-    """64-bit SimHash as a single Column expression. Prefer
-    ``with_simhash`` in plans — this inline form duplicates the vote-array
-    aggregate across its 64 bit references."""
-    return _simhash_from_votes(_simhash_votes(text_col))
 
 
 def simhash_pairs(

@@ -3,13 +3,13 @@ token counting, language-ID heuristic, quality scoring, document
 fingerprinting. All pure JVM-side Column expressions (whole-stage
 codegen'd) — no Python in the hot path.
 
-These extend the reference's surface (it has no text ops) per the task
-brief; they operate on the ``documents`` table
-(doc_id, text, lang, source, n_chars).
+The reference has no text ops; these operate on the ``documents``
+table (doc_id, text, lang, source, n_chars).
 
-Scale notes: every function here is a projection — no shuffle, no UDF;
-cost is the scan. Fingerprints use md5 (portable across engines for
-oracle checks) and xxhash64 (faster, for internal joins).
+Scale notes: no UDF; the per-row metrics are projections (cost is the
+scan), while ``token_frequencies`` and ``contamination_report`` shuffle.
+Fingerprints use md5 (portable across engines for oracle checks) and
+xxhash64 (faster, for internal joins).
 """
 
 from __future__ import annotations
@@ -112,6 +112,28 @@ def normalize_text(col: str) -> Column:
     return F.trim(F.regexp_replace(F.lower(F.col(col)), r"\s+", " "))
 
 
+def word_tokens(col: str) -> Column:
+    """Tokens of ``normalize_text(col)``, empties removed: the one
+    case-folding tokenizer (``tokens`` keeps case). NULL text → NULL."""
+    return F.array_remove(F.split(normalize_text(col), " "), "")
+
+
+def word_ngrams(toks: str, n: int) -> Column:
+    """Every word n-gram of the token column named ``toks``, in order,
+    duplicates kept; ``[]`` with fewer than ``n`` tokens or NULL tokens.
+
+    ``toks`` is the *name* of a projected column (``word_tokens(text)``
+    aliased), not an expression: Spark evaluates what a lambda captures
+    once per element, so an inline tokenizer would re-run once per gram
+    (O(k²) per row of k tokens)."""
+    t = F.col(toks)
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(t) - (n - 1)),
+        lambda j: F.array_join(F.slice(t, j, n), " "),
+    )
+    return F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<string>"))
+
+
 def fingerprint_md5(col: str) -> Column:
     """Portable content fingerprint (md5 matches DuckDB's md5())."""
     return F.md5(normalize_text(col))
@@ -163,7 +185,7 @@ def token_frequencies(
     exactly the hot stopword tokens; the HLL partials keep one pass and
     are the 10^12-token setting (exact stays the default for oracle
     parity at test scale)."""
-    toks = F.array_remove(F.split(normalize_text(text_col), " "), "")
+    toks = word_tokens(text_col)
     ident = (
         F.col(id_col) if id_col is not None else F.monotonically_increasing_id()
     )
@@ -245,59 +267,44 @@ def duplicate_line_fraction(col: str) -> Column:
     )
 
 
-def top_ngram_fraction(col: str, n: int = 2) -> Column:
+def top_ngram_fraction(grams: str) -> Column:
     """Fraction of a document's word n-grams occupied by its single most
-    frequent n-gram (boilerplate/chant detector). Per-row cost is
-    O(distinct_grams × grams) in JVM higher-order funcs — fine for
-    documents (n_tokens ≤ ~10^4); it is per-row arithmetic, never a
-    shuffle."""
-    toks = F.array_remove(F.split(normalize_text(col), " "), "")
-    k = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(0)))
-    grams = F.when(
-        k >= n,
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")),
-    ).otherwise(F.array())
-    total = F.size(grams)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)),
-        )
-    )
-    return F.when(total > 0, top / total).otherwise(F.lit(0.0))
+    frequent n-gram (boilerplate/chant detector), read from the projected
+    grams column named ``grams`` (see ``word_ngrams``); 0.0 without
+    grams. One sort and one run-length ``aggregate``: O(g log g) per row
+    of g grams, never a shuffle."""
+    g = F.col(grams)
+
+    def step(acc, x):  # acc = (previous gram, its run length, longest run)
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(1)
+        top = F.greatest(acc["top"], run)
+        return F.struct(x.alias("prev"), run.alias("run"), top.alias("top"))
+
+    start = F.struct(F.lit(None).cast("string").alias("prev"), F.lit(0).alias("run"),
+                     F.lit(0).alias("top"))
+    top = F.aggregate(F.array_sort(g), start, step)["top"]
+    return F.when(F.size(g) > 0, top / F.size(g)).otherwise(0.0)
 
 
 def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """df + (dup_line_frac, top_bigram_frac) — one projection."""
-    return df.select(
-        "*",
-        F.round(duplicate_line_fraction(text_col), 6).alias("dup_line_frac"),
-        F.round(top_ngram_fraction(text_col, 2), 6).alias("top_bigram_frac"),
+    """df + (dup_line_frac, top_bigram_frac); tokens, bigrams projected once."""
+    return (
+        df.withColumn("_toks", word_tokens(text_col))
+        .withColumn("_grams", word_ngrams("_toks", 2))
+        .select(
+            "*",
+            F.round(duplicate_line_fraction(text_col), 6).alias("dup_line_frac"),
+            F.round(top_ngram_fraction("_grams"), 6).alias("top_bigram_frac"),
+        )
+        .drop("_toks", "_grams")
     )
 
 
 # ---------------------------------------------------------------------------
 # benchmark decontamination (n-gram overlap vs a held-out/test set) — the
 # standard LLM-curation stage that keeps evaluation data out of training
-# corpora. No reference analogue; brief-mandated pipeline extension.
+# corpora. No reference analogue.
 # ---------------------------------------------------------------------------
-
-
-def ngrams(col: str, n: int = 8) -> Column:
-    """Distinct word n-grams of the normalized text, as strings — a pure
-    array expression (sequence + transform + slice), JVM-side, no UDF.
-    Documents shorter than ``n`` tokens yield an empty array."""
-    toks = tokens(col)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda j: F.array_join(F.slice(toks, j, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
 
 
 def contamination_report(
@@ -309,7 +316,8 @@ def contamination_report(
     bench_text_col: str = "text",
     bench_id_col: str = "bench_id",
 ) -> DataFrame:
-    """Per (document, benchmark item) n-gram overlap:
+    """Per (document, benchmark item) count of shared distinct word
+    n-grams of the normalized text (``word_tokens``):
     (doc_id, bench_id, n_shared_ngrams). A row exists only for pairs
     sharing ≥1 n-gram; downstream thresholds decide contamination.
 
@@ -321,14 +329,15 @@ def contamination_report(
     n-grams join on xxhash64, not the string: 8-word grams average ~50
     bytes and the broadcast carries 8-byte keys (hash collisions at 64
     bits are ~N²/2⁶⁵ — negligible at any benchmark size)."""
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ngrams(text_col, n)).alias("_g"),
-    ).select("doc_id", F.xxhash64("_g").alias("_gh"))
-    b = benchmark.select(
-        F.col(bench_id_col).alias("bench_id"),
-        F.explode(ngrams(bench_text_col, n)).alias("_g"),
-    ).select("bench_id", F.xxhash64("_g").alias("_gh")).dropDuplicates()
+
+    def gram_hashes(df: DataFrame, ident: str, text: str, alias: str) -> DataFrame:
+        grams = F.array_distinct(word_ngrams("_toks", n))
+        hashes = F.transform(grams, lambda g: F.xxhash64(g))
+        toks = df.select(F.col(ident).alias(alias), word_tokens(text).alias("_toks"))
+        return toks.select(alias, F.explode(hashes).alias("_gh"))
+
+    d = gram_hashes(docs, id_col, text_col, "doc_id")
+    b = gram_hashes(benchmark, bench_id_col, bench_text_col, "bench_id").dropDuplicates()
     return (
         d.join(F.broadcast(b), "_gh")
         .groupBy("doc_id", "bench_id")

@@ -8,8 +8,9 @@
 names every entry is replayed; otherwise only the named ones, in the
 order given (a name may repeat, so ``sim_topk sim_topk sim_topk`` is one
 cold and two warm runs). Prints MATCH / MISMATCH / ROWS-ONLY and the query's wall
-time (Spark collect only, the oracle excluded) per run, and exits
-non-zero on any mismatch or unknown query name.
+time (Spark collect only, the oracle excluded) per run, then the total
+Spark wall time and the five slowest runs, and exits non-zero on any
+mismatch or unknown query name.
 """
 
 from __future__ import annotations
@@ -71,6 +72,7 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     mismatches = []
+    walls = []
     oracles = entrymod.oracle_sql()
     for name in names:
         t0 = time.perf_counter()
@@ -78,6 +80,7 @@ def main() -> int:
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
         wall = time.perf_counter() - t0
+        walls.append((wall, name))
         oracle = oracles.get(name)
         if oracle is None:
             print(f"{name}: ROWS-ONLY ({len(srows)} rows) {wall:.3f}s")
@@ -95,6 +98,9 @@ def main() -> int:
         if not ok:
             mismatches.append(name)
     spark.stop()
+    print(f"TOTAL: {sum(w for w, _ in walls):.3f}s over {len(walls)} runs")
+    for wall, name in sorted(walls, reverse=True)[:5]:
+        print(f"  slowest: {name} {wall:.3f}s")
     print("MISMATCHES:", mismatches)
     return 1 if mismatches else 0
 

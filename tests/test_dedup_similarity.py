@@ -89,6 +89,27 @@ def test_simhash_near_dups(docs):
     assert not any(4 in p for p in pairs)
 
 
+@pytest.mark.parametrize(
+    "pairs_fn",
+    [
+        lambda df: jaccard_pairs(df, threshold=0.5),
+        lambda df: minhash_lsh_pairs(df, threshold=1.0),
+        lambda df: simhash_pairs(df, max_hamming=3),
+    ],
+    ids=["jaccard", "minhash", "simhash"],
+)
+def test_null_text_never_pairs(spark, pairs_fn):
+    """NULL text has no shingles or hash, so two NULL docs are never a
+    pair; empty and whitespace-only text normalize to the same empty
+    document and do pair, as do identical normal docs."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "   "), (5, BASE), (6, BASE)],
+        "doc_id long, text string",
+    )
+    got = {(r["id_a"], r["id_b"]) for r in pairs_fn(df).collect()}
+    assert got == {(3, 4), (5, 6)}
+
+
 @pytest.fixture(scope="module")
 def vectors(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()

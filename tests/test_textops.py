@@ -141,12 +141,15 @@ def test_redact_pii_and_counts(spark):
 
 
 def test_repetition_metrics(spark):
-    from neontology_spark.textops import repetition_metrics
+    from neontology_spark.dedup import word_shingles
+    from neontology_spark.textops import repetition_metrics, word_tokens
 
     df = spark.createDataFrame(
         [(1, "same line\nsame line\nother line"),
          (2, "go go go go"),          # one bigram 'go go' dominates
-         (3, "all words differ here")],
+         (3, "all words differ here"),
+         (4, None), (5, ""), (6, "   "), (7, "one"), (8, "a b"),
+         (9, "A a b")],               # normalizes to bigrams 'a a', 'a b'
         "doc_id long, text string",
     )
     out = {r["doc_id"]: r for r in repetition_metrics(df).collect()}
@@ -154,6 +157,25 @@ def test_repetition_metrics(spark):
     assert out[2]["top_bigram_frac"] == 1.0   # every bigram is 'go go'
     assert out[3]["dup_line_frac"] == 0.0
     assert abs(out[3]["top_bigram_frac"] - 1 / 3) < 1e-6  # 3 distinct bigrams
+    assert [out[i]["top_bigram_frac"] for i in range(4, 10)] == [
+        0.0, 0.0, 0.0, 0.0, 1.0, 0.5
+    ]
+
+    # shingles of the same rows: fewer than n tokens -> the whole
+    # normalized text as one shingle; NULL text -> no shingles
+    sh = {
+        r["doc_id"]: sorted(r["sh"])
+        for r in df.select("doc_id", word_tokens("text").alias("_toks"))
+        .select("doc_id", word_shingles("_toks", 3).alias("sh"))
+        .collect()
+    }
+    assert sh == {
+        1: ["line other line", "line same line", "same line other",
+            "same line same"],
+        2: ["go go go"],
+        3: ["all words differ", "words differ here"],
+        4: [], 5: [""], 6: [""], 7: ["one"], 8: ["a b"], 9: ["a a b"],
+    }
 
 
 def test_token_frequencies_approx_docs_mode(spark):
@@ -177,13 +199,14 @@ def test_token_frequencies_approx_docs_mode(spark):
 def test_decontamination_ngram_overlap(spark):
     """Planted contamination: doc 10 embeds bench item 1's full text
     (all its 4-grams), doc 11 shares a partial window, doc 12 is clean;
-    short docs (< n tokens) yield no grams. Broadcast and shuffle
-    formulations agree, and decontaminate() drops exactly the flagged
-    docs at each threshold."""
+    short docs (< n tokens) yield no grams; grams are case-folded on both
+    sides. decontaminate() drops exactly the flagged docs at each
+    threshold."""
     from neontology_spark.textops import (
         contamination_report,
         decontaminate,
-        ngrams,
+        word_ngrams,
+        word_tokens,
     )
     from pyspark.sql import functions as F
 
@@ -223,9 +246,74 @@ def test_decontamination_ngram_overlap(spark):
 
     # empty-gram edge: doc shorter than n
     assert docs.filter(F.col("doc_id") == 13).select(
-        F.size(ngrams("text", 4)).alias("s")
-    ).first()["s"] == 0
+        word_tokens("text").alias("_toks")
+    ).select(F.size(word_ngrams("_toks", 4)).alias("s")).first()["s"] == 0
+
+    # grams are built from case-folded tokens on both sides
+    cased = contamination_report(
+        spark.createDataFrame(
+            [(20, "the quick brown fox jumps")], "doc_id long, text string"
+        ),
+        spark.createDataFrame(
+            [(3, "The Quick brown fox")], "bench_id long, text string"
+        ),
+        n=4,
+    )
+    assert [tuple(r) for r in cased.collect()] == [(20, 3, 1)]
 
     # the benchmark side must enter as a broadcast join by default
     plan = rep._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def _lambda_bodies(plan: str):
+    """Text of every ``lambdafunction(...)`` in a plan string."""
+    out, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        out.append(plan[start:i])
+        start = plan.find("lambdafunction(", i)
+    return out
+
+
+def test_long_documents_tokenize_once(spark):
+    """Four ~10^4-token documents through every gram consumer. Each row
+    is tokenized once and its grams read the projected tokens; with the
+    tokenizer inside a gram lambda this is quadratic per row (hours for
+    the top-bigram share at this size). The optimized plans must keep
+    the tokenizer out of every lambda, so a re-inlining projection
+    collapse fails here rather than as a slowdown."""
+    import time
+
+    from neontology_spark.dedup import jaccard_pairs
+    from neontology_spark.textops import contamination_report, repetition_metrics
+
+    words = [f"w{i % 997}" for i in range(10_000)]
+    docs = spark.createDataFrame(
+        [(d, " ".join(words[d:] + words[:d])) for d in range(4)],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [(1, " ".join(words[:50]))], "bench_id long, text string"
+    )
+    frames = [
+        repetition_metrics(docs),
+        jaccard_pairs(docs, threshold=0.5, max_shingle_df=None),
+        contamination_report(docs, bench, n=8),
+    ]
+    # plans first, so a re-inlined tokenizer fails before it runs for
+    # hours; jaccard_pairs reads its shingles through a checkpoint, so
+    # only the other two plans still show the tokenizer
+    for f in (frames[0], frames[2]):
+        plan = f._jdf.queryExecution().optimizedPlan().toString()
+        assert "split(" in plan
+        assert not any("split(" in body for body in _lambda_bodies(plan))
+    t0 = time.perf_counter()
+    rep, pairs, cont = (f.collect() for f in frames)
+    assert time.perf_counter() - t0 < 30.0
+    assert len(rep) == 4 and len(pairs) == 6 and len(cont) == 4
