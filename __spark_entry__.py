@@ -67,7 +67,7 @@ def entry(spark: SparkSession) -> DataFrame:
         check_unique,
         partition_row_counts,
     )
-    from neontology_spark.checks.base import CheckResult
+    from neontology_spark.checks.base import CheckResult, verdict_pass
     from neontology_spark.checks.drift import (
         check_drift,
         drift_metrics,
@@ -103,9 +103,7 @@ def entry(spark: SparkSession) -> DataFrame:
         CheckResult("payload_invariants", "Image", check_payload(images)),
         drift,
     ]
-    verdicts = results[0].verdicts(counts)
-    for r in results[1:]:
-        verdicts = verdicts.unionByName(r.verdicts(counts))
+    _, verdicts = verdict_pass(results, counts)
     return verdicts.orderBy("check", "part")
 
 

@@ -122,9 +122,11 @@ class ValidationRun:
 
     ``run(resume=True)`` computes pending = all partitions − completed
     lineage, filters the table to pending partitions (an IN-list predicate
-    that prunes Iceberg/parquet partitions at the scan), executes the checks
-    as above, appends verdicts + violations + metrics, then marks lineage.
-    Returns the pending-part verdict rows.
+    that prunes Iceberg/parquet partitions at the scan), runs the checks as
+    above through one ``checks.base.verdict_pass`` (each check's plan runs
+    once; one aggregate gives every check's verdicts), appends violations +
+    verdicts + metrics, then marks lineage. Returns the pending-part
+    verdict rows.
     """
 
     spark: SparkSession
@@ -154,7 +156,7 @@ class ValidationRun:
         return parts - self.store.completed_parts(self.run_id, self.label)
 
     def run(self, resume: bool = True) -> DataFrame:
-        from .checks.base import CheckResult, partition_row_counts
+        from .checks.base import VERDICT_SCHEMA, CheckResult, partition_row_counts, verdict_pass
 
         all_parts = self.all_parts()
         completed = (
@@ -163,29 +165,11 @@ class ValidationRun:
         pending = sorted(all_parts - completed)
         has_completed = bool(all_parts & completed)
         if not pending:
-            from .checks.base import VERDICT_SCHEMA
-
             return self.spark.createDataFrame([], VERDICT_SCHEMA)
 
         # partition pruning: IN-list on the partition column reaches the scan
         scoped = self.table.filter(F.col(self.part_col).isin([int(p) for p in pending]))
-        counts = partition_row_counts(scoped, self.part_col)
-
-        verdicts = None
-        violations = None
-
-        def accumulate(res) -> None:
-            nonlocal verdicts, violations
-            v = res.verdicts(counts)
-            verdicts = v if verdicts is None else verdicts.unionByName(v)
-            violations = (
-                res.violations
-                if violations is None
-                else violations.unionByName(res.violations)
-            )
-
-        for check in self.checks:
-            accumulate(check(scoped))
+        results = [check(scoped) for check in self.checks]
         for check in self.global_checks:
             # whole-table scan (cross-partition violations must not be
             # missed on resume); output restricted to pending partitions —
@@ -221,8 +205,11 @@ class ValidationRun:
                     )
                 )
                 pending_v = pending_v.unionByName(late.select(*pending_v.columns))
-            accumulate(CheckResult(res.check, res.label, pending_v))
+            results.append(CheckResult(res.check, res.label, pending_v))
 
+        violations, verdicts = verdict_pass(
+            results, partition_row_counts(scoped, self.part_col)
+        )
         run_tag = F.lit(self.run_id).alias("run_id")
         self.store.append("violations", violations.select(run_tag, "*"))
         self.store.append("verdicts", verdicts.select(run_tag, "*"))

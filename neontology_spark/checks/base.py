@@ -11,16 +11,18 @@ Scale design:
 * Violation rows carry only (partition, key, column, detail) — never wide
   payload columns like image ``bytes`` — so a check over a 100 TB table
   emits KBs, not TBs, and the scan can column-prune to the checked columns.
-* Verdicts are a ``groupBy(part)`` over the (tiny) violation set joined
-  against per-partition row counts — one extra aggregate over the scan.
+* One ``verdict_pass`` serves all checks of a run: their violations are
+  materialized once (each check's plan runs once per run or micro-batch)
+  and one ``groupBy(part, check, label)`` gives every check's verdicts.
 * All checks are pure DataFrame expressions: Catalyst pushes the involved
   column reads into the scan, and AQE handles stragglers.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,9 +51,6 @@ VERDICT_SCHEMA = T.StructType(
         T.StructField("passed", T.BooleanType(), False),
     ]
 )
-
-VIOLATION_COLS = [f.name for f in VIOLATION_SCHEMA.fields]
-VERDICT_COLS = [f.name for f in VERDICT_SCHEMA.fields]
 
 
 def shape_violations(
@@ -94,34 +93,44 @@ class CheckResult:
     label: str
     violations: DataFrame
 
-    def verdicts(self, row_counts: DataFrame) -> DataFrame:
-        """Per-partition pass/fail. ``row_counts`` = (part, n_rows) computed
-        once per table and shared across checks (one scan, many verdicts).
 
-        The join is NULL-safe AND full-outer on ``part``: global checks use
-        part=NULL (the documented sentinel), and a plain left equi-join would
-        silently drop their violation counts — a false "passed" verdict from
-        a validation engine. Full-outer also surfaces violations attributed
-        to a part with no row-count row (n_rows=NULL, passed=False) instead
-        of hiding them.
-        """
-        vio = (
-            self.violations.groupBy("part")
-            .agg(F.count(F.lit(1)).alias("n_violations"))
-        )
-        return (
-            row_counts.join(
-                vio, row_counts["part"].eqNullSafe(vio["part"]), "full_outer"
-            )
-            .select(
-                F.coalesce(row_counts["part"], vio["part"]).cast("long").alias("part"),
-                F.lit(self.check).alias("check"),
-                F.lit(self.label).alias("label"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-                F.coalesce(F.col("n_violations"), F.lit(0)).cast("long").alias("n_violations"),
-                (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
-            )
-        )
+def verdict_pass(
+    results: Sequence[CheckResult], row_counts: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """``(violations, verdicts)`` of a run's check results, both
+    materialized once (GC-scoped ``localCheckpoint``): ``violations`` is
+    their union, so each check's plan runs once however many outputs read
+    it; ``verdicts`` is one ``groupBy(part, check, label)`` over those rows
+    (each carries its result's (check, label), as ``shape_violations``
+    writes them) and the grid ``row_counts`` (one (part, n_rows) row per part) ×
+    (check, label) — the full-outer join of the two without its shuffles.
+
+    Grouping is NULL-safe: global checks' part=NULL violations reach the
+    NULL-part verdict (an equi-join drops them — a false "passed"), and
+    violations at a part with no row-count row surface as n_rows=NULL,
+    passed=False. Two results sharing a (check, label) pair would merge
+    into one count, so they raise ``ValueError``.
+    """
+    names = [(r.check, r.label) for r in results]
+    dup = {n for n in names if names.count(n) > 1}
+    if dup:
+        raise ValueError(f"duplicate check results (check, label): {dup}")
+    violations = functools.reduce(
+        DataFrame.unionByName, [r.violations for r in results]
+    ).localCheckpoint()
+    # literal (check, label) structs, not createDataFrame: no driver-side
+    # frame build, and the grid stays one projection over the counts
+    pairs = [F.struct(F.lit(c).alias("check"), F.lit(lb).alias("label")) for c, lb in names]
+    grid = row_counts.select("part", "n_rows", F.inline(F.array(*pairs)), F.lit(0).alias("_v"))
+    hits = violations.select("part", "check", "label", F.lit(1).alias("_v"))
+    verdicts = (
+        grid.unionByName(hits, allowMissingColumns=True)
+        .groupBy("part", "check", "label")
+        .agg(F.max("n_rows").alias("n_rows"), F.sum("_v").alias("n_violations"))
+        .withColumn("passed", F.col("n_violations") == 0)
+        .localCheckpoint()
+    )
+    return violations, verdicts
 
 
 def partition_row_counts(df: DataFrame, part_col: Optional[str]) -> DataFrame:

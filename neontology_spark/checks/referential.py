@@ -93,9 +93,10 @@ def check_referential(
         part_col=part_col,
         column=rel_key,
         key=F.col(rel_key).cast("string"),
+        # a NULL endpoint key never matches; render it, or concat is NULL
         detail=F.concat(
             F.lit(f"No {side} node found matching {node_key}="),
-            F.col(rel_key).cast("string"),
+            F.coalesce(F.col(rel_key).cast("string"), F.lit("NULL")),
         ),
     )
 

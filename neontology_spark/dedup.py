@@ -31,7 +31,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textops import normalize_text, word_ngrams, word_tokens
+from .textops import fingerprint_md5, normalize_text, word_ngrams, word_tokens
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -62,7 +62,7 @@ def exact_duplicate_groups(
     # fingerprint AFTER spreading: the normalize+md5 regex pass is the
     # expensive per-row work and otherwise runs on the scan's 1-2 splits
     fp = spread_to_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), F.md5(normalize_text(text_col)).alias("fp_md5")
+        F.col(id_col), fingerprint_md5(text_col).alias("fp_md5")
     )
     if max_ids is None:
         ids = F.collect_list(id_col)
@@ -90,7 +90,7 @@ def dedupe_exact(
     min() doesn't."""
     from .bucketing import spread_to_parallelism
 
-    fp = F.md5(normalize_text(text_col)).alias("_fp")
+    fp = fingerprint_md5(text_col).alias("_fp")
     keep = (
         spread_to_parallelism(df.select(id_col, text_col))
         .select(F.col(id_col), fp)
@@ -135,7 +135,7 @@ def dedupe_exact_incremental(
     is Exchange-free on the store side. Batch-side cost is one
     fingerprint projection + two map-side-combinable aggregations
     (same shape as ``dedupe_exact``)."""
-    fp = F.md5(normalize_text(text_col))
+    fp = fingerprint_md5(text_col)
     fresh = dedupe_exact(batch, text_col, id_col).withColumn("_fp", fp)
     if seen_fps is not None:
         fresh = fresh.join(
@@ -180,7 +180,7 @@ def split_paragraphs(
         "id",
         (F.col("_i") + 1).alias("para_idx"),
         "para",
-        F.md5(normalize_text("para")).alias("fp_md5"),
+        fingerprint_md5("para").alias("fp_md5"),
     )
 
 

@@ -7,8 +7,9 @@ re-scanning the table.
 
 * ``incremental_validate`` — ``readStream`` over a directory (new parquet
   files = new micro-batches) → ``foreachBatch``: run the same CheckResult
-  suite used in batch mode on each micro-batch, append verdicts/violations
-  (tagged with the epoch) to the audit store. foreachBatch gives
+  suite and verdict pass used in batch mode on each micro-batch (each
+  check's plan runs once), append verdicts/violations (tagged with the
+  epoch) to the audit store. foreachBatch gives
   exactly-once *per sink append* under Spark's checkpointing; the audit
   rows are idempotent on (run_id, epoch) replay.
 * ``streaming_unique_violations`` — CROSS-batch uniqueness via
@@ -36,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .audit import AuditStore
-from .checks.base import CheckResult, partition_row_counts
+from .checks.base import CheckResult, partition_row_counts, verdict_pass
 
 
 def incremental_validate(
@@ -62,18 +63,10 @@ def incremental_validate(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        counts = partition_row_counts(batch_df, part_col)
-        verdicts = None
-        violations = None
-        for check in checks:
-            res = check(batch_df)
-            v = res.verdicts(counts)
-            verdicts = v if verdicts is None else verdicts.unionByName(v)
-            violations = (
-                res.violations
-                if violations is None
-                else violations.unionByName(res.violations)
-            )
+        violations, verdicts = verdict_pass(
+            [check(batch_df) for check in checks],
+            partition_row_counts(batch_df, part_col),
+        )
         tag = [
             F.lit(run_id).alias("run_id"),
             F.lit(int(epoch_id)).alias("epoch"),

@@ -1,6 +1,7 @@
 """Checkpoint-resume tests: a partially-completed run resumes with only
 the pending partitions; completed partitions are never re-processed."""
 
+import dataclasses
 import functools
 
 import pytest
@@ -83,6 +84,45 @@ def test_partial_completion_resumes_only_pending(setup):
     assert all("[late" not in r["detail"] for r in dup_rows if r["part"] == 5)
     # now fully complete
     assert run.pending_parts() == set()
+
+
+def test_each_check_runs_once(setup, counting_check):
+    """One verdict pass: the violations are materialized once, so the
+    violations and verdicts appends do not each re-run a check's plan."""
+    images, store, run = setup
+    rows_seen, check = counting_check
+    run.checks = [*run.checks, check]
+    run.run()
+    assert rows_seen.value == N
+
+
+def test_crash_before_lineage_replays_to_one_shot_streams(spark, tmp_path, setup, monkeypatch):
+    """A crash after the violations and verdicts appends but before the
+    lineage marker: the resumed run re-processes every partition and
+    appends identical rows, so the cleaned streams equal a one-shot
+    run's (lineage is written last)."""
+    images, store, run = setup
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before lineage")
+
+    with monkeypatch.context() as m:
+        m.setattr(AuditStore, "mark_completed", crash)
+        with pytest.raises(RuntimeError, match="crash before lineage"):
+            run.run()
+    assert store.completed_parts("run_test_1", "Image") == set()
+    run.run(resume=True)
+    assert store.completed_parts("run_test_1", "Image") == set(range(N_PARTS))
+
+    one_shot = AuditStore(spark, str(tmp_path / "one_shot"))
+    dataclasses.replace(run, store=one_shot).run()
+    for stream in ("violations", "verdicts"):
+        want = one_shot.read_clean(stream).collect()
+        # the replay appended every row twice; read_clean collapses them
+        assert store.read(stream).count() == 2 * len(want)
+        got = store.read_clean(stream).collect()
+        assert len(got) == len(want)
+        assert set(map(tuple, got)) == set(map(tuple, want))
 
 
 def test_resume_false_reprocesses_everything(setup):

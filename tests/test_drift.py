@@ -354,3 +354,31 @@ def test_small_input_skips_the_sizing_scan(spark, monkeypatch):
     scanned, scanned_jobs = run("quantiles_estimate_unknown")
     assert skipped == scanned and len(skipped) == 3 * 3
     assert skipped_jobs < scanned_jobs
+
+
+def test_fused_psi_ks_matches_drift_metrics(spark):
+    """``fused._psi_ks`` (driver-side, over the rollup's histograms) and
+    ``drift_metrics`` (distributed) compute the same PSI and KS: one
+    histogram with baseline-only, current-only and empty buckets."""
+    from neontology_spark.fused import _psi_ks
+
+    base = {"b00001": 10, "b00002": 5, "b00004": 0, "b00005": 6}  # b00002 baseline-only
+    cur = {"b00001": 4, "b00003": 7, "b00004": 2, "b00005": 0}  # b00003 current-only
+
+    def hist(counts, part):
+        return spark.createDataFrame(
+            [(part, "w", b, n) for b, n in counts.items()],
+            "part long, column string, bucket string, n long",
+        )
+
+    got = drift_metrics(hist(base, None), hist(cur, 3)).collect()
+    assert [(r["part"], r["column"]) for r in got] == [(3, "w")]
+
+    def probs(counts):
+        total = sum(counts.values())
+        return {b: n / total for b, n in counts.items()}
+
+    psi, ks = _psi_ks(probs(base), probs(cur))
+    assert got[0]["psi"] == pytest.approx(psi, abs=1e-12)
+    assert got[0]["ks"] == pytest.approx(ks, abs=1e-12)
+    assert psi > 0.2 and ks > 0.15  # the buckets above really drift

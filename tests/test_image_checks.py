@@ -16,6 +16,7 @@ from neontology_spark.checks import (
     column_stats,
     partition_row_counts,
 )
+from neontology_spark.checks.base import verdict_pass
 from neontology_spark.images import (
     BAD_FMT_ROWS,
     CAPTION_MISMATCH_ROWS,
@@ -120,7 +121,7 @@ def test_lossy_codec_still_above_threshold(spark):
 def test_verdicts_per_partition(images, model):
     counts = partition_row_counts(images, "part")
     res = check_required(images, model, part_col="part")
-    verdicts = {r["part"]: r for r in res.verdicts(counts).collect()}
+    verdicts = {r["part"]: r for r in verdict_pass([res], counts)[1].collect()}
     assert len(verdicts) == N_PARTS
     bad_parts = {i % N_PARTS for i in NULL_FMT_ROWS}
     for p, r in verdicts.items():
@@ -141,7 +142,7 @@ def test_global_null_part_verdict_not_false_pass(spark, images, model):
         part_col=None, key=F.col("image_id"),
     )
     counts = partition_row_counts(images, None)  # single part=NULL row
-    v = CheckResult("global_check", "Image", two_bad).verdicts(counts).collect()
+    v = verdict_pass([CheckResult("global_check", "Image", two_bad)], counts)[1].collect()
     assert len(v) == 1
     assert v[0]["part"] is None
     assert v[0]["n_violations"] == 2
@@ -158,10 +159,19 @@ def test_verdict_surfaces_violations_with_unknown_part(images, model):
         images.limit(1), check="x", label="Image", part_col=None,
     )
     counts = partition_row_counts(images, "part")  # parts 0..7, no NULL
-    rows = CheckResult("x", "Image", vio).verdicts(counts).collect()
+    rows = verdict_pass([CheckResult("x", "Image", vio)], counts)[1].collect()
     null_rows = [r for r in rows if r["part"] is None]
     assert len(null_rows) == 1 and null_rows[0]["passed"] is False
     assert all(r["passed"] for r in rows if r["part"] is not None)
+
+
+def test_verdict_pass_rejects_duplicate_check_names(images, model):
+    """Two results sharing a (check, label) pair would merge into one
+    verdict count per part; the verdict pass refuses them instead."""
+    counts = partition_row_counts(images, "part")
+    res = check_required(images, model, part_col="part")
+    with pytest.raises(ValueError, match="required_not_null"):
+        verdict_pass([res, res], counts)
 
 
 def test_unique_null_key_duplicates_reported(spark, model):

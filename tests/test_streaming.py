@@ -52,6 +52,34 @@ def test_incremental_validate(spark, tmp_path):
     assert vio.filter(F.col("check") == "required_not_null").count() == 3
 
 
+def test_incremental_validate_runs_each_check_once(spark, tmp_path, counting_check):
+    """One micro-batch: each check's plan runs once across the violations
+    and verdicts appends."""
+    images = generate_images(spark, n_rows=400, n_parts=4)
+    inp = str(tmp_path / "incoming")
+    images.write.parquet(inp)
+    rows_seen, check = counting_check
+    store = AuditStore(spark, str(tmp_path / "audit"))
+    q = incremental_validate(
+        spark,
+        inp,
+        schema=spark.read.parquet(inp).schema,
+        checks=[check],
+        store=store,
+        run_id="stream_once",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=10_000,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    verdicts = store.read("verdicts")
+    assert verdicts.select("epoch").distinct().count() == 1
+    assert verdicts.count() == 4
+    assert rows_seen.value == 400
+
+
 def test_windowed_event_counts_batch_parity(spark, sf_dir):
     """The windowed aggregation is testable on a batch frame (same plan)."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
