@@ -43,7 +43,10 @@ from . import (  # noqa: F401  (public module surface)
     textops,
     tools,
     upsert,
+    worker_imports,
 )
+
+worker_imports.install()
 
 __version__ = "0.1.0"
 

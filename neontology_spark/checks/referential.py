@@ -119,7 +119,8 @@ def check_referential(
     )
     result = CheckResult(name, model.rel_type, vio_unmatched.unionByName(vio_amb))
     if error_on_unmatched:
-        sample = result.violations.limit(5).collect()
+        # only unmatched rows escalate; ambiguous ones stay violations
+        sample = vio_unmatched.limit(5).collect()
         if sample:
             raise UnmatchedError(
                 f"{name}: {[r['detail'] for r in sample]} (first 5 shown)"

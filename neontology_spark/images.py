@@ -507,11 +507,13 @@ def _batch_scorer(sample_rows: Optional[int]):
     )
 
 
-def make_payload_files_kernel(sample_rows: Optional[int] = None):
+def make_payload_files_kernel(files: list, sample_rows: Optional[int] = None):
     """mapInArrow kernel factory — DIRECT-READ path: input batches carry
-    parquet file PATHS; the worker opens each file with pyarrow (C++
-    reader) and scores its batches locally. The JVM⇄Python exchange then
-    carries only paths in and scores out (KBs), taking the byte payload
+    ``id`` indexes into ``files``, a list the closure holds, so the file
+    list reaches the tasks without a local relation or a shuffle. The
+    worker opens each file with pyarrow (C++ reader) and scores its
+    batches locally. The JVM⇄Python exchange then carries only file
+    indexes in and scores out (KBs), taking the byte payload
     off the exchange entirely — the pattern for heavy binary columns where
     the python exchange, not the scan, is the bottleneck (measured
     ~200 MB/s machine-wide in this sandbox regardless of cores or JVM
@@ -526,9 +528,9 @@ def make_payload_files_kernel(sample_rows: Optional[int] = None):
     score = _batch_scorer(sample_rows)
 
     def kernel(it):
-        for path_batch in it:
-            for path in path_batch.column("path").to_pylist():
-                pf = pq.ParquetFile(path)
+        for id_batch in it:
+            for i in id_batch.column("id").to_pylist():
+                pf = pq.ParquetFile(files[i])
                 for rb in pf.iter_batches(
                     batch_size=1024, columns=["part", "image_id", "bytes", "caption"]
                 ):
@@ -540,10 +542,11 @@ def make_payload_files_kernel(sample_rows: Optional[int] = None):
 def check_payload_files(
     spark, table_path: str, sample_rows: Optional[int] = None
 ) -> DataFrame:
-    """Direct-read payload check over a parquet directory: distributes the
-    file list (one file per task — parquet row-groups give intra-file
-    batching), scores in python workers, returns VIOLATION_SCHEMA rows.
-    Semantics identical to ``check_payload`` (parity-tested);
+    """Direct-read payload check over a parquet directory: splits the file
+    list into ranges of a ``spark.range`` (a few files per task — parquet
+    row-groups give intra-file batching), scores in python workers,
+    returns VIOLATION_SCHEMA rows (none for a directory without parquet
+    files). Semantics identical to ``check_payload`` (parity-tested);
     ``sample_rows`` selects the row-sampled PSNR estimator."""
     import os as _os
 
@@ -552,16 +555,19 @@ def check_payload_files(
         for f in _os.listdir(table_path)
         if f.endswith(".parquet")
     )
-    # ~12 ms of fixed python-stage cost per task (measured r6): pack a
-    # few files per task instead of one — same balance (files are
-    # uniform writer outputs), half the task overhead at the bench shape
-    n_tasks = max(
-        spark.sparkContext.defaultParallelism, (len(files) + 7) // 8
+    # A python task's fixed cost on a 4-core host (Python 3.11): 37-60 ms
+    # once its worker has run a task, 0.22-0.33 s without worker_imports
+    # (the median gap between one worker's tasks over an empty 32-task
+    # mapInArrow, 3 runs of scripts/python_task_overhead.py). Files are
+    # uniform writer outputs, so one task per core stays balanced: over
+    # 64 files, 4 tasks scored in 0.38 s and 8 in 0.45 s. At most 16
+    # files a task.
+    cores = spark.sparkContext.defaultParallelism
+    n_tasks = min(len(files), max(cores, -(-len(files) // 16)))
+    ids = spark.range(len(files), numPartitions=max(n_tasks, 1))
+    scored = ids.mapInArrow(
+        make_payload_files_kernel(files, sample_rows), schema=PAYLOAD_DDL
     )
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), n_tasks)
-    )
-    scored = fdf.mapInArrow(make_payload_files_kernel(sample_rows), schema=PAYLOAD_DDL)
     return _payload_violations(scored)
 
 

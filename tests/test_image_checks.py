@@ -250,6 +250,44 @@ def test_payload_direct_read_parity(spark, images, tmp_path_factory):
     assert a == d and len(a) > 0
 
 
+def test_payload_direct_read_plan_scores_every_file_once(spark, images, tmp_path_factory):
+    """The file list reaches the kernel through a ``Range``, with no
+    ``Exchange`` below the ``MapInArrow``. With every caption mismatched,
+    each stored row is one violation, so the direct-read rows equal
+    check_payload's as multisets and cover every row of every file once."""
+    from collections import Counter
+
+    from neontology_spark.images import check_payload_files
+
+    path = str(tmp_path_factory.mktemp("plan") / "img.parquet")
+    images.withColumn("caption", F.concat("caption", F.lit("!"))).repartition(6).write.parquet(
+        path
+    )
+    stored = spark.read.parquet(path)
+    direct = check_payload_files(spark, path)
+
+    plan = direct._jdf.queryExecution().executedPlan().toString()
+    below = plan[plan.index("MapInArrow"):]
+    assert "Range (0, 6" in below and "Exchange" not in below
+
+    rows = Counter((r["part"], r["key"], r["detail"]) for r in direct.collect())
+    assert rows == Counter((r["part"], r["key"], r["detail"]) for r in check_payload(stored).collect())
+    assert Counter(k for _, k, _ in rows.elements()) == Counter(
+        r["image_id"] for r in stored.select("image_id").collect()
+    )
+
+
+def test_payload_direct_read_without_parquet_files(spark, tmp_path):
+    """A directory with no parquet file yields zero violation rows."""
+    from neontology_spark.checks.base import VIOLATION_SCHEMA
+    from neontology_spark.images import check_payload_files
+
+    (tmp_path / "_SUCCESS").write_text("")
+    out = check_payload_files(spark, str(tmp_path))
+    assert out.schema.simpleString() == VIOLATION_SCHEMA.simpleString()
+    assert out.collect() == []
+
+
 def test_label_conformance(spark, images, model):
     """Secondary-label conformance (reference neo4jengine.py:77-80 warns on
     unexpected read-back label sets; consumes NodeModel.all_labels)."""

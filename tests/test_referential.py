@@ -60,3 +60,23 @@ def test_error_on_unmatched(spark, nodes, model):
     clean = edges.filter("target IS NOT NULL")
     res = check_referential(clean, nodes, model, node_key="id", error_on_unmatched=True)
     assert res.violations.count() == 0
+
+
+def test_error_on_unmatched_ignores_ambiguous_edges(spark, nodes, model):
+    """Edges onto an ambiguous key do not raise, and stay violations; the
+    message lists the unmatched rows even when ambiguous ones outnumber
+    them."""
+    amb_only = spark.createDataFrame(
+        [(0, f"h{i}", "hot") for i in range(HOT_EDGES)] + [(0, "s0", "a")],
+        "part long, source string, target string",
+    )
+    res = check_referential(amb_only, nodes, model, node_key="id", error_on_unmatched=True)
+    assert res.violations.count() == HOT_EDGES
+
+    mixed = amb_only.unionByName(
+        spark.createDataFrame([(1, "s9", "x")], "part long, source string, target string")
+    )
+    with pytest.raises(UnmatchedError) as err:
+        check_referential(mixed, nodes, model, node_key="id", error_on_unmatched=True)
+    assert "matching id=x" in str(err.value)
+    assert "ambiguous" not in str(err.value)
