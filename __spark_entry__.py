@@ -9,7 +9,9 @@ driver-provided parquet tables.
 
 from __future__ import annotations
 
+import atexit
 import os
+import pathlib
 import sys
 import tempfile
 import zipfile
@@ -27,13 +29,17 @@ def _ensure_shipped(spark: SparkSession) -> None:
     """Ship the neontology_spark package to executor Python workers —
     the sandbox analogue of ``spark-submit --py-files`` (north_star).
     Without this, mapInPandas kernels fail to unpickle when the driver
-    process was launched outside the repo directory."""
+    process was launched outside the repo directory. The zip is per
+    driver process and is removed when its interpreter exits."""
     sc = spark.sparkContext
-    if getattr(_ensure_shipped, "_done_for", None) == id(sc):
+    done_for = getattr(_ensure_shipped, "_done_for", None)
+    if done_for == id(sc):
         return
     zpath = os.path.join(
         tempfile.gettempdir(), f"neontology_spark_pkg_{os.getpid()}.zip"
     )
+    if done_for is None:  # first zip of this process
+        atexit.register(pathlib.Path(zpath).unlink, missing_ok=True)
     pkgdir = os.path.join(_REPO, "neontology_spark")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _, files in os.walk(pkgdir):

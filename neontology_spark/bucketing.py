@@ -85,44 +85,3 @@ def estimated_bytes(df: DataFrame) -> Optional[int]:
     except Exception:
         return None
     return est if est < (1 << 60) else None
-
-
-def spread_to_parallelism(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism
-    when the incoming plan yields fewer partitions.
-
-    Compute-heavy per-row stages (text normalization fingerprints,
-    signature folds, vector scoring) inherit the SCAN's partitioning —
-    and a few-MB parquet table is 1-2 input splits at the session's
-    split size, so without this those stages run on 1-2 cores of the
-    whole cluster (measured r6: the documents table's md5-normalize
-    fingerprint pass ran single-core at sf1.0). At production sizes the
-    scan already yields >= defaultParallelism splits and this is a
-    no-op; the repartition fires exactly when the shuffle it adds is
-    negligible.
-
-    ``min_bytes``: inputs ESTIMATED below this (logical-plan stats — a
-    driver-side constant-time probe) are left alone — for cheap per-row
-    work the shuffle costs more than it saves (measured r6: +0.4 s on
-    the sf0.1 dedup_exact path). Callers whose per-row work is heavy
-    relative to bytes (vector signature/scoring folds) pass
-    ``min_bytes=0``. Decisions come from the logical stats alone
-    (cheap); the physical partition probe (``.rdd`` — it forces a full
-    physical planning pass, ~0.2 s on composite plans) runs only when
-    stats are unavailable/unknown."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    est = estimated_bytes(df)
-    if est is not None:
-        if min_bytes <= est < _SPREAD_CAP_BYTES:
-            return df.repartition(n)
-        return df
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
-
-
-# above this estimated size any sane split config already yields >=
-# cluster-parallelism scan splits, and repartitioning would shuffle real
-# bytes — leave such inputs to their natural partitioning
-_SPREAD_CAP_BYTES = 4 << 30

@@ -57,13 +57,7 @@ def exact_duplicate_groups(
     ``collect_list`` that only ever holds ``max_ids`` elements; slicing
     after a full collect would still materialize the mega-row.
     ``max_ids=None`` restores unbounded membership (audit mode)."""
-    from .bucketing import spread_to_parallelism
-
-    # fingerprint AFTER spreading: the normalize+md5 regex pass is the
-    # expensive per-row work and otherwise runs on the scan's 1-2 splits
-    fp = spread_to_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), fingerprint_md5(text_col).alias("fp_md5")
-    )
+    fp = df.select(F.col(id_col), fingerprint_md5(text_col).alias("fp_md5"))
     if max_ids is None:
         ids = F.collect_list(id_col)
     else:
@@ -88,12 +82,9 @@ def dedupe_exact(
     + semi-join (two map-side-combinable aggregations) rather than a
     row_number window over the entire table — windows sort whole partitions,
     min() doesn't."""
-    from .bucketing import spread_to_parallelism
-
     fp = fingerprint_md5(text_col).alias("_fp")
     keep = (
-        spread_to_parallelism(df.select(id_col, text_col))
-        .select(F.col(id_col), fp)
+        df.select(F.col(id_col), fp)
         .groupBy("_fp")
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
@@ -290,17 +281,11 @@ def jaccard_pairs(
     ``max_shingle_df`` drops shingles present in more than that many docs —
     the hot-key cap that keeps the candidate-pair count linear-ish at scale.
     """
-    from .bucketing import spread_to_parallelism
-
     # GC-scoped checkpoint (see minhash_lsh_pairs): the shingles feed three
     # consumers, and the cut keeps inferred filters (explode's size > 0, the
     # joins' isnotnull) from re-inlining the tokenizer into the gram lambda
     base = (
-        spread_to_parallelism(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")),
-            min_bytes=0,  # shingling explodes output well beyond input bytes
-        )
-        .select("id", word_tokens("_t").alias("_toks"))
+        df.select(F.col(id_col).alias("id"), word_tokens(text_col).alias("_toks"))
         .select("id", word_shingles("_toks", n).alias("sh"))
         .withColumn("sh_size", F.size("sh"))
         .localCheckpoint(eager=False)
@@ -383,17 +368,10 @@ def minhash_lsh_pairs(
     b=16, r=4 ⇒ collision prob at s=0.6 is 1-(1-0.6^4)^16 ≈ 0.90;
     at s=0.9 ≈ 1.0; at s=0.3 ≈ 0.12 (cheap to verify away).
     """
-    from .bucketing import spread_to_parallelism
-
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    # signature AFTER the spread: num_hashes × shingles per row is the
-    # expensive part and otherwise runs on the scan's 1-2 splits
     sig = with_minhash_signature(
-        spread_to_parallelism(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
-            min_bytes=0,  # 64 hash folds per row — heavy per byte
-        ),
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
         "_text",
         "sig",
         num_hashes,
@@ -527,13 +505,8 @@ def simhash_pairs(
     # localCheckpoint, not persist — GC-scoped storage (see
     # minhash_lsh_pairs); the 64-bit hash feeds both sides of the
     # chunk self-join and the hamming verification
-    from .bucketing import spread_to_parallelism
-
     sh = with_simhash(
-        spread_to_parallelism(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
-            min_bytes=0,  # 64-bit vote aggregate per row — heavy per byte
-        ),
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
         "_text",
         "sh",
     ).drop("_text")

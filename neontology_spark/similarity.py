@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
-from .bucketing import spread_to_parallelism
+from .bucketing import estimated_bytes
 
 # ---------------------------------------------------------------------------
 # the vector-math kernel — called on executors (inside mapInArrow /
@@ -353,12 +353,48 @@ def brute_force_topk(
     a NULL vector or element are skipped); the corpus crosses the
     boundary once and the |Q| x N pair explosion happens in the kernel."""
     qs = _query_side(queries, id_col, vec_col)
-    c = spread_to_parallelism(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
-        min_bytes=0,
-    )
+    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
     probes = _group_probes(qs, [[()]] * len(qs[0]))
     return _topk(_probe_rerank_arrow(c, probes, []), k)
+
+
+# ---------------------------------------------------------------------------
+# spreading few-split inputs over the session's cores
+# ---------------------------------------------------------------------------
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition of ``df`` to the session's default
+    parallelism, for the frames that feed a centroid-assignment kernel
+    (``_assign_arrow``, ``_lloyd_partials_arrow``, or
+    ``_probe_rerank_arrow(..., assign_matrix=...)``).
+
+    Those kernels do heavy Python work per row: one dot product against
+    every centroid. They inherit the scan's partitioning, and a few-MB
+    embedding table is 1-2 input splits, so without the exchange they
+    run on 1-2 cores. Measured at scaled sf1.0 in ``local[4]`` over six
+    alternating sessions, dropping this exchange made ``ivf_ann``
+    1.944 → 2.755 s and ``ivf_ann_two_level`` 2.343 → 3.292 s (+41 %,
+    slower in 6/6 pairs). In front of JVM-expression stages or a cheap
+    per-row rerank the same exchange costs more than it saves.
+
+    ``lsh_topk`` is the one other caller. Its small query side is
+    broadcast, so the band join and the candidate dedup run in the
+    corpus scan's own partitions: without the exchange a 1-split corpus
+    does that work in one task (same protocol: 7.04 → 9.41 s without it,
+    slower in 6/6 pairs, while the ``ivf_ann`` control moved +8 %).
+
+    The decision reads the optimizer's size estimate, a driver-side
+    probe that runs no job: below 4 GiB the frame is repartitioned;
+    above it any sane split size already yields enough scan splits, and
+    a repartition would shuffle real bytes. When the estimate is
+    unknown, the physical partition count decides (``.rdd`` forces a
+    physical planning pass, so it runs only then)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    est = estimated_bytes(df)
+    if est is not None:
+        return df.repartition(n) if est < 4 << 30 else df
+    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
 
 # ---------------------------------------------------------------------------
@@ -491,8 +527,7 @@ def lsh_topk(
     def with_bands(df, id_as, vec_as, norm_as):
         vecs = df.select(F.col(id_col).alias(id_as), F.col(vec_col).alias(vec_as))
         sig = with_hyperplane_signature(
-            spread_to_parallelism(vecs, min_bytes=0),
-            vec_as, "sig", num_planes, dim, norm_col=norm_as,
+            _spread(vecs), vec_as, "sig", num_planes, dim, norm_col=norm_as
         )
         return _explode_bands(sig, bands, r, id_as, vec_as, norm_as)
 
@@ -545,7 +580,7 @@ def train_ivf_centroids(
         # spread BEFORE persisting: the init sort and every Lloyd
         # assignment run over the cached partitions, and a few-MB
         # embedding table otherwise caches as 1-2 blocks (1-2 cores)
-        train = spread_to_parallelism(train, min_bytes=0).persist()
+        train = _spread(train).persist()
     init_rows = (
         train.select(vec_col).orderBy(F.xxhash64(id_col)).limit(n_centroids).collect()
     )
@@ -628,9 +663,8 @@ def ivf_topk(
         corpus, n_centroids, id_col, vec_col, iters, sample_cap=sample_cap
     )
     probes = _flat_probes(_query_side(queries, id_col, vec_col), cents, n_probe)
-    inv = spread_to_parallelism(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
-        min_bytes=0,
+    inv = _spread(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
     )
     return _topk(
         _probe_rerank_arrow(inv, probes, ["cluster"], assign_matrix=cents), k
@@ -659,7 +693,7 @@ def write_ivf_index(
     width; the shuffle on the partition key then writes ONE file per
     cluster instead of writers x clusters small files (guide §6)."""
     inv = _assign_arrow(
-        spread_to_parallelism(corpus.select(id_col, vec_col), min_bytes=0),
+        _spread(corpus.select(id_col, vec_col)),
         centroids,
         id_col,
         vec_col,
@@ -690,10 +724,7 @@ def ivf_topk_indexed(
     probes = _flat_probes(_query_side(queries, id_col, vec_col), centroids, n_probe)
     clusters = sorted(key[0] for key in probes)
     assert len(clusters) <= len(centroids)
-    inv = spread_to_parallelism(
-        spark.read.parquet(index_path).filter(F.col("cluster").isin(clusters)),
-        min_bytes=0,
-    )
+    inv = spark.read.parquet(index_path).filter(F.col("cluster").isin(clusters))
     return _topk(_probe_rerank_arrow(inv, probes, ["cluster"]), k)
 
 
@@ -745,10 +776,7 @@ def embedding_near_duplicates(
     r = num_planes // bands
     dim = dim if dim is not None else _infer_dim(df, vec_col)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    sig = with_hyperplane_signature(
-        spread_to_parallelism(vecs, min_bytes=0), "v", "sig", num_planes, dim,
-        norm_col="vn",
-    )
+    sig = with_hyperplane_signature(vecs, "v", "sig", num_planes, dim, norm_col="vn")
     # lineage cut (mirrors dedup.py minhash): the signature feeds the
     # band rows AND the vector re-attach joins — without it the kernel
     # reruns per consumer. localCheckpoint, not persist: blocks are
@@ -830,7 +858,7 @@ def train_ivf_two_level(
     if sample_cap is not None and n > sample_cap:
         train = train.sample(fraction=min(1.0, 1.1 * sample_cap / n), seed=seed)
     assigned = _assign_arrow(
-        spread_to_parallelism(train, min_bytes=0),
+        _spread(train),
         coarse,
         id_col,
         vec_col,
@@ -884,7 +912,7 @@ def assign_two_level(
     (k_coarse + k_fine) · dim. Rows without a fine row (NULL vector, or a
     coarse cell that got no sample rows) get fine_id 0."""
     c = _assign_arrow(
-        spread_to_parallelism(df.select(id_col, vec_col), min_bytes=0),
+        _spread(df.select(id_col, vec_col)),
         index.coarse,
         id_col,
         vec_col,
@@ -997,5 +1025,5 @@ def ivf_topk_two_level_indexed(
     pred = F.lit(False)
     for ci, fi in sorted(probes):
         pred = pred | ((F.col("coarse_id") == ci) & (F.col("fine_id") == fi))
-    inv = spread_to_parallelism(spark.read.parquet(index_path).filter(pred), min_bytes=0)
+    inv = spark.read.parquet(index_path).filter(pred)
     return _topk(_probe_rerank_arrow(inv, probes, ["coarse_id", "fine_id"]), k)
